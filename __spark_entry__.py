@@ -1541,41 +1541,8 @@ def _q_interval_purchase_after_error(spark, sf):
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # ROTATION (round 5, final): the driver's CORRECTNESS gate checks the
-    # FIRST 50 entries.  This round's window =
-    #   (a) the five r4 hash-fail rows whose oracles got the HUGEINT->
-    #       BIGINT cast (counter_increase_1h, docs_lm_score,
-    #       docs_dsir_score, docs_nb_lang, emb_kmeans) — values verified
-    #       identical in r4, the r5 check must show them green;
-    #   (b) every query whose ENGINE CODE changed since the r4 check:
-    #       tfidf_cosine (prefix-filtered rewrite), docs_jaccard_pairs
-    #       (chunked pair emission), neardup_clusters (single-job CC
-    #       convergence), minhash/simhash (metrics plumbing),
-    #       corpus_clean_e2e (forwards guard metrics), the terms.py
-    #       family (docs_tfidf_terms/commonness/collocations — shared
-    #       vocab/N plumbing), dup spans (dedup.py shared shingle path);
-    #   (c) the NEW ops media_dims_synth (header-dims parsers, literal
-    #       ground-truth oracle), pheno_longterm_synth (K12 smoothing-
-    #       spline phenology, golden-table oracle), and
-    #       stl_decompose_synth (STL-style seasonal decomposition,
-    #       golden-table oracle) and hw_forecast_synth (Holt-Winters,
-    #       golden-table oracle) — displacing r4-green docs_commonness
-    #       (terms.py vocab plumbing keeps THREE in-window sentinels:
-    #       docs_tfidf_terms, tfidf_cosine, docs_collocations),
-    #       r4-green docs_dup_span_cut (its shingle path keeps the
-    #       docs_dup_spans sentinel in-window), and r4-green
-    #       docs_minhash_sigs (the signature path feeds both in-window
-    #       LSH queries, incl. the metered guard branch);
-    #   (d) 31 of the 43 rows last driver-checked in r3, prioritized per
-    #       the r4 verdict: rollup_1h, cascades, codec_roundtrip,
-    #       blob_range_read, tier family, then every remaining stale row
-    #       whose operator is non-trivial.
-    # Left below the window: 11 stale-but-quadruple-green rows whose
-    # queries are single-expression joins/set-ops untouched since r1-r2
-    # (url_canonicalize ... docs_winnow_fp), and the 33 rows the driver
-    # checked GREEN in r4 with code untouched since.  ALL 94 rows are
-    # still swept locally by scripts/check_oracle.py before every commit
-    # that touches engine code; see COVERAGE.md for the matrix.
+    # The external correctness gate checks the FIRST 50 entries; Tier-1
+    # (tests/test_oracle.py) checks every entry against its oracle_sql().
     return {
         # ---- driver window (first 50) ----
         "media_dims_synth": _q_media_dims_synth,
@@ -1629,7 +1596,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "docs_lang_dist": _q_docs_lang_dist,
         "pheno_longterm_synth": _pheno_synth,
         # ---- below the driver's 50-query window (full-registry
-        # coverage via scripts/check_oracle.py) ----
+        # coverage via tests/test_oracle.py) ----
         "docs_minhash_sigs": _q_docs_minhash,
         "docs_dup_span_cut": _q_docs_dup_span_cut,
         "docs_commonness": _q_docs_commonness,

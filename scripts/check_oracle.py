@@ -1,121 +1,19 @@
-"""Local mimic of the driver's correctness gate: run every
-__spark_entry__.queries() entry at sf0.01 and diff it against its
-oracle_sql() DuckDB result (row count + schema-name set + sorted values).
+"""DuckDB oracle parity at sf0.01 for the given queries (default: all) —
+a shortcut to the Tier-1 test tests/test_oracle.py.
 
 Usage: python scripts/check_oracle.py [query ...]
 """
 
 from __future__ import annotations
 
-import math
 import os
 import sys
-import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+import pytest
 
-import duckdb  # noqa: E402
-
-import __spark_entry__ as entrymod  # noqa: E402
-from yatsm_spark.session import get_spark  # noqa: E402
-
-SF_DIR = "/root/testdata/sf0.01"
-TABLES = [
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
-]
-
-
-def norm(v):
-    """Total-orderable, engine-agnostic value repr (stringly)."""
-    if v is None or v != v:  # None / NaN / NaT
-        return ""
-    if isinstance(v, bool):
-        return f"b:{int(v)}"
-    if isinstance(v, float):
-        return f"f:{round(v, 9):.9f}"
-    if isinstance(v, int):
-        return f"i:{v}"
-    if hasattr(v, "isoformat"):
-        s = v.isoformat()
-        return f"t:{s[:10]}" if len(s) == 10 else f"t:{s}"
-    return f"s:{v}"
-
-
-def main() -> int:
-    only = set(sys.argv[1:])
-    spark = get_spark("oracle_check", master="local[8]", shuffle_partitions=16)
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
-        )
-    qs = entrymod.queries()
-    oracles = entrymod.oracle_sql()
-    failures = []
-    for name, fn in qs.items():
-        if only and name not in only:
-            continue
-        t0 = time.time()
-        try:
-            sdf = fn(spark, SF_DIR)
-            cols = sorted(sdf.columns)
-            srows = sorted(
-                tuple(norm(r[c]) for c in cols) for r in sdf.collect()
-            )
-        except Exception as e:  # noqa: BLE001
-            print(f"FAIL {name}: spark error: {e}")
-            failures.append(name)
-            continue
-        if name not in oracles:
-            print(f"ok   {name}: rows-only ({len(srows)} rows, {time.time()-t0:.1f}s)")
-            if len(srows) == 0:
-                print(f"WARN {name}: 0 rows")
-            continue
-        try:
-            rel = con.sql(oracles[name])
-            # The driver's hash path renders DuckDB HUGEINT as float while
-            # Spark emits bigint — fetchall() hides this (Python int both
-            # ways), so gate on the declared relation types instead.
-            hug = [
-                c for c, t in zip(rel.columns, rel.types)
-                if "HUGEINT" in str(t).upper()
-            ]
-            if hug:
-                print(
-                    f"FAIL {name}: oracle columns typed HUGEINT {hug} — "
-                    "the driver hashes these as float; CAST(... AS BIGINT)"
-                )
-                failures.append(name)
-                continue
-            cur = con.execute(oracles[name])
-            raw_cols = [d[0] for d in cur.description]
-            raw = cur.fetchall()
-        except Exception as e:  # noqa: BLE001
-            print(f"FAIL {name}: duckdb error: {e}")
-            failures.append(name)
-            continue
-        ocols = sorted(raw_cols)
-        perm = [raw_cols.index(c) for c in ocols]
-        orows = sorted(tuple(norm(row[i]) for i in perm) for row in raw)
-        status = []
-        if cols != ocols:
-            status.append(f"schema {cols} vs {ocols}")
-        if len(srows) != len(orows):
-            status.append(f"rowcount {len(srows)} vs {len(orows)}")
-        elif srows != orows:
-            ndiff = sum(1 for a, b in zip(srows, orows) if a != b)
-            ex = next((a, b) for a, b in zip(srows, orows) if a != b)
-            status.append(f"values differ in {ndiff}/{len(srows)} rows; first: {ex[0]} vs {ex[1]}")
-        if status:
-            print(f"FAIL {name}: {'; '.join(status)}")
-            failures.append(name)
-        else:
-            print(f"PASS {name}: {len(srows)} rows ({time.time()-t0:.1f}s)")
-    print(f"\n{len(failures)} failures: {failures}" if failures else "\nALL PASS")
-    spark.stop()
-    return 1 if failures else 0
-
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+TEST = os.path.join(ROOT, "tests", "test_oracle.py")
 
 if __name__ == "__main__":
-    raise SystemExit(main())
+    ids = [f"{TEST}::test_oracle_parity[{q}]" for q in sys.argv[1:]] or [TEST]
+    raise SystemExit(pytest.main(["-q", "-p", "no:cacheprovider", *ids]))

@@ -46,3 +46,18 @@ def test_classify_is_deterministic(spark, segments_with_truth):
     a = sorted(map(tuple, classify_segments(m1, segs).collect()))
     b = sorted(map(tuple, classify_segments(m2, segs).collect()))
     assert a == b  # pinned seed -> identical forests -> identical labels
+
+
+def test_classify_after_observe(spark, segments_with_truth):
+    """Scoring must not depend on what the session ran before: a session
+    that has served a df.observe no longer serializes, so the model's
+    transform must not close over it."""
+    from pyspark.sql import Observation
+
+    segs, truth = segments_with_truth
+    obs = Observation("before_classify")
+    spark.range(3).observe(obs, F.count(F.lit(1)).alias("n")).collect()
+    assert obs.get["n"] == 3
+    model = train_segment_classifier(segs, truth, n_trees=5, max_depth=3)
+    scored = classify_segments(model, segs).collect()
+    assert len(scored) == segs.count()

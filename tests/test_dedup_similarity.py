@@ -1,6 +1,6 @@
 """Dedup / similarity / text-analysis operators — semantic unit tests.
 Cross-engine (DuckDB) parity for the same ops is covered by
-__spark_entry__ + scripts/check_oracle.py."""
+__spark_entry__ + tests/test_oracle.py."""
 
 from __future__ import annotations
 

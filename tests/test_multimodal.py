@@ -131,6 +131,42 @@ def test_bmp_8bit_palette_mapped_luma(spark):
     assert row["mean_luma"] > 0.9
 
 
+def test_png_gray_alpha_luma(spark):
+    """A valid 8-bit gray+alpha PNG (color type 4) decodes to 2 channels
+    with luma = the gray plane; the alpha plane is ignored."""
+    import struct
+    import zlib
+
+    import numpy as np
+
+    from yatsm_spark.operators.multimodal import _png_luma_grid, decode_image
+
+    w, h = 4, 3
+    gray = (np.arange(h * w, dtype=np.uint8).reshape(h, w) * 20)
+    alpha = np.full((h, w), 255 - 7, dtype=np.uint8)
+    px = np.stack([gray, alpha], axis=-1).reshape(h, 2 * w)
+    raw = b"".join(b"\x00" + row.tobytes() for row in px)  # filter 0 per row
+
+    def chunk(ctype, payload):
+        crc = zlib.crc32(ctype + payload) & 0xFFFFFFFF
+        return struct.pack(">I", len(payload)) + ctype + payload + struct.pack(">I", crc)
+
+    data = (
+        b"\x89PNG\r\n\x1a\n"
+        + chunk(b"IHDR", struct.pack(">IIBBBBB", w, h, 8, 4, 0, 0, 0))
+        + chunk(b"IDAT", zlib.compress(raw))
+        + chunk(b"IEND", b"")
+    )
+    ch, grid = _png_luma_grid(data)
+    assert ch == 2
+    assert np.array_equal(grid, gray.astype(np.float64))
+
+    df = spark.createDataFrame([(1, bytearray(data))], "doc_id long, html binary")
+    row = decode_image(df, fake=False).first()
+    assert (row["width"], row["height"], row["n_channels"]) == (w, h, 2)
+    assert abs(row["mean_luma"] - round(float(gray.mean()) / 255.0, 6)) < 1e-9
+
+
 def test_resize_bmp_real_nearest_neighbor(spark):
     """Resize must sample the REAL pixel grid: thumb bytes equal the
     test's own integer nearest-neighbor resample of the pattern's luma

@@ -1,5 +1,5 @@
 """Quality / decontamination / PII operators — semantic unit tests.
-Cross-engine parity is covered by __spark_entry__ + scripts/check_oracle.py
+Cross-engine parity is covered by __spark_entry__ + tests/test_oracle.py
 (docs_repetition, docs_decontam, docs_pii_redact)."""
 
 from __future__ import annotations

@@ -1,6 +1,6 @@
 """Generic series operators (operators/series.py) — unit tests on tiny
 in-memory frames; SQL-oracle parity is covered by __spark_entry__ +
-scripts/check_oracle.py at sf0.01."""
+tests/test_oracle.py at sf0.01."""
 
 from __future__ import annotations
 

@@ -1,5 +1,5 @@
 """Term-statistics operators — semantic unit tests.
-Cross-engine parity is covered by __spark_entry__ + scripts/check_oracle.py
+Cross-engine parity is covered by __spark_entry__ + tests/test_oracle.py
 (docs_tfidf_terms, docs_commonness)."""
 
 from __future__ import annotations

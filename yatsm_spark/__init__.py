@@ -10,8 +10,9 @@ per-process numpy loops.  See SURVEY.md for the full blueprint.
 
 Design rules (normative):
   * DataFrame/SQL only; RDDs never; per-row Python UDFs never.
-  * Grouped kernels (CCDC segmentation, Gorilla codec) run as vectorized
-    pandas UDFs via ``groupBy().applyInPandas``.
+  * Per-url kernels (CCDC segmentation, Gorilla codec, EWMA) run as
+    ``mapInPandas`` over url-sorted partitions, many url runs per Arrow
+    batch, through one runner (plans/__init__.py::map_key_runs).
   * Fixed explicit schemas; session timezone pinned UTC.
   * Aggregates designed re-aggregable (cnt+sum, never avg-of-avgs) so
     retention tiers cascade exactly.

@@ -25,8 +25,8 @@ No scipy/sklearn: the F-distribution CDF needed by K9 is computed with an
 own regularized-incomplete-beta continued fraction (Lentz), standard
 public-domain numerics (cf. Numerical Recipes §6.4 formulas).
 
-These kernels never see Spark: plans/segmentation.py feeds them pandas
-groups via applyInPandas.
+These kernels never see Spark: plans/segmentation.py feeds them the url
+runs of url-sorted partitions via mapInPandas.
 """
 
 from __future__ import annotations

@@ -174,18 +174,12 @@ def _png_luma_grid(data: bytes):
         px = decode_png(data)
     except ValueError:
         return None
-    ch, grid = _rgb_luma_grid(px)
     # palette expands to RGB; alpha counts as a channel but luma ignores it
-    if px.ndim == 3 and px.shape[2] in (2, 4):
+    if px.ndim == 3 and px.shape[2] == 2:  # gray+alpha: luma is the gray plane
         import numpy as np
 
-        rgbish = px[..., :-1].astype(np.float64)
-        if px.shape[2] == 2:  # gray+alpha
-            return 2, rgbish[..., 0]
-        return 4, (
-            0.299 * rgbish[..., 0] + 0.587 * rgbish[..., 1] + 0.114 * rgbish[..., 2]
-        )
-    return ch, grid
+        return 2, px[..., 0].astype(np.float64)
+    return _rgb_luma_grid(px)
 
 
 def _gif_luma_grid(data: bytes):

@@ -756,8 +756,8 @@ def ewma_series(
     EWMA is inherently recursive — no window frame expresses it — so
     this is the repo's standard vectorized-kernel shape (north_star:
     "vectorized pandas/Arrow UDFs, never per-row Python"):
-    repartition(key) + sortWithinPartitions + ONE mapInPandas, with the
-    batch-boundary key carried over exactly like plans/blobs._url_runs.
+    repartition(key) + sortWithinPartitions + ONE mapInPandas over whole
+    key runs (plans/__init__.py::map_key_runs).
     Inside a partition the recursion is STEPPED-MATRIX vectorized: one
     loop over max-run-LENGTH, each step a numpy op across every active
     series in the partition — per-partition cost O(max_len) vector ops,
@@ -770,6 +770,8 @@ def ewma_series(
     import numpy as np
     import pandas as pd
 
+    from yatsm_spark.plans import _run_bounds, map_key_runs
+
     a, sh = int(alpha_num), int(alpha_shift)
     if not (0 < a <= (1 << sh)):
         raise ValueError("alpha_num must be in (0, 2^alpha_shift]")
@@ -777,7 +779,7 @@ def ewma_series(
     vu = F.floor(F.col(value_col) * scale).cast("long")
     src = df.select(
         F.col(key_col), F.col(ts_col), *[F.col(c) for c in extra], vu.alias("value_u")
-    ).repartition(key_col).sortWithinPartitions(key_col, ts_col, *extra)
+    )
 
     fields = {f.name: f for f in src.schema.fields}
     out_schema = "{}, {}, {}value_u long, ewma_u long".format(
@@ -789,11 +791,8 @@ def ewma_series(
     )
 
     def _run(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        keys = pdf[key_col].to_numpy()
         x = pdf["value_u"].to_numpy(dtype=np.int64)
-        bounds = np.flatnonzero(keys[1:] != keys[:-1]) + 1
-        starts = np.concatenate(([0], bounds))
-        ends = np.concatenate((bounds, [keys.size]))
+        starts, ends = _run_bounds(pdf[key_col].to_numpy())
         s = np.empty_like(x)
         s[starts] = x[starts]
         lens = ends - starts
@@ -806,22 +805,7 @@ def ewma_series(
         out["ewma_u"] = s
         return out
 
-    def _partition(batches):
-        pend = None
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            if pend is not None:
-                pdf = pd.concat([pend, pdf], ignore_index=True)
-            keys = pdf[key_col].to_numpy()
-            cut = int(np.flatnonzero(keys == keys[-1])[0])
-            pend = pdf.iloc[cut:]
-            if cut:
-                yield _run(pdf.iloc[:cut])
-        if pend is not None and len(pend):
-            yield _run(pend)
-
-    return src.mapInPandas(_partition, schema=out_schema)
+    return map_key_runs(src, key_col, [ts_col, *extra], _run, out_schema)
 
 
 def time_weighted_avg(

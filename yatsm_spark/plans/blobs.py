@@ -3,14 +3,15 @@
 The north_star sink (BASELINE.json:6): per (url, tier), the bucket series
 is encoded into ``ts_blob`` (delta-of-delta, microsecond epochs) +
 ``val_blob`` (Gorilla XOR of the measured value) via one url shuffle +
-partition-batched ``mapInPandas`` — numpy kernels inside
-(functions/codec.py), binary columns out.  ``decode_blobs`` is the inverse
-(exploded points) for verification and point queries.
+partition-batched ``mapInPandas`` (plans/__init__.py::map_key_runs) —
+numpy kernels inside (functions/codec.py), binary columns out.
+``decode_blobs`` is the inverse (exploded points) for verification and
+point queries.
 
 Scale notes:
   * Group size is bounded by construction (input is a rollup tier; a
-    decade of 1h buckets is ~88k rows — fits one Arrow batch).  For larger
-    spans, split by year upstream (plans/segmentation.py does the same).
+    decade of 1h buckets is ~88k rows, held as one pandas block even when
+    it spans Arrow batches).  For larger spans, split by year upstream.
   * Encoding is append-friendly: blobs are per (url, tier) and can be
     re-encoded per partition on backfill without touching neighbors.
 
@@ -25,7 +26,14 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from yatsm_spark.functions.codec import CODEC_VERSION, decode_series, encode_series
+from yatsm_spark.functions.codec import (
+    CODEC_VERSION,
+    decode_series,
+    encode_dod,
+    encode_gorilla,
+    encode_series,
+)
+from yatsm_spark.plans import _run_bounds, map_key_runs
 
 BLOBS_SCHEMA = (
     "url string, tier string, start_ts timestamp, end_ts timestamp, "
@@ -35,39 +43,21 @@ BLOBS_SCHEMA = (
 POINTS_SCHEMA = "url string, tier string, bucket_ts timestamp, value double"
 
 
-def _url_runs(batches, ts_col: str, value_cols: tuple[str, ...]):
-    """Shared partition-batched iterator for the blob encoders: turns the
-    Arrow batch stream of one url-contiguous partition into numpy
-    (urls, ts_us, {col: values}) flushes.  The last url of each batch is
-    held back and re-prepended to the next (its run may continue there) —
-    this carry-over subtlety lives HERE exactly once, so both encoders
-    stay in lockstep."""
-    pend: tuple | None = None
-    for pdf in batches:
-        if pdf.empty:
-            continue
-        urls = pdf["url"].to_numpy()
-        ts_us = pdf[ts_col].astype("int64").to_numpy() // 1000  # ns -> us
-        vals = {c: pdf[c].to_numpy(dtype="float64") for c in value_cols}
-        if pend is not None:
-            urls = np.concatenate((pend[0], urls))
-            ts_us = np.concatenate((pend[1], ts_us))
-            vals = {c: np.concatenate((pend[2][c], vals[c])) for c in value_cols}
-        # rows are url-contiguous by the sort, so the last url's run is a
-        # suffix; hold it back for the next batch
-        cut = int(np.flatnonzero(urls == urls[-1])[0])
-        pend = (urls[cut:], ts_us[cut:], {c: vals[c][cut:] for c in value_cols})
-        if cut:
-            yield urls[:cut], ts_us[:cut], {c: vals[c][:cut] for c in value_cols}
-    if pend is not None and pend[0].size:
-        yield pend
+def _real_points(tier_df: DataFrame) -> DataFrame:
+    """Drop gap_fill's synthetic rows: the archives hold observed buckets."""
+    if "gap_filled" in tier_df.columns:
+        return tier_df.filter(~F.col("gap_filled"))
+    return tier_df
 
 
-def _run_bounds(urls: np.ndarray):
-    """(start, end) index pairs of each url run in a url-contiguous array —
-    one vectorized comparison, no pandas groupby."""
-    bounds = np.flatnonzero(urls[1:] != urls[:-1]) + 1
-    return np.concatenate(([0], bounds)), np.concatenate((bounds, [urls.size]))
+def _sorted_runs(pdf: pd.DataFrame, ts_col: str, *keys: str):
+    """Per key run of a block of complete runs: (start, end, the run's
+    microsecond epochs in time order, that order as a permutation of the
+    run's rows)."""
+    ts_us = pdf[ts_col].astype("int64").to_numpy() // 1000  # ns -> us
+    for s, e in zip(*_run_bounds(*(pdf[k].to_numpy() for k in keys))):
+        order = np.argsort(ts_us[s:e], kind="stable")
+        yield s, e, ts_us[s:e][order], order
 
 
 def encode_blobs(
@@ -79,14 +69,11 @@ def encode_blobs(
 ) -> DataFrame:
     """Encode each url's (ts, value) series into one blob row.
 
-    Physical plan: repartition(url) + sortWithinPartitions(url, ts) +
-    ``mapInPandas`` over whole partitions — one Arrow batch carries MANY
-    contiguous url groups, so the per-group Python/Arrow overhead that a
-    ``groupBy().applyInPandas`` pays (one UDF call + one pandas frame per
-    group) is amortized across the batch.  Measured ~2.5x faster at 20k
-    groups of ~80 rows; identical output.  Groups split across batch
-    boundaries are carried over inside the iterator (rows are
-    partition-contiguous by the sort).
+    Physical plan: :func:`yatsm_spark.plans.map_key_runs` keyed on url —
+    url repartition + sort (or a presorted bucketed scan), then
+    ``mapInPandas`` over whole partitions with many url runs per Arrow
+    batch.  Measured ~2.5x faster than ``groupBy().applyInPandas`` at 20k
+    groups of ~80 rows; identical output.
     """
 
     out_cols = [
@@ -94,42 +81,30 @@ def encode_blobs(
         "ts_blob", "val_blob", "codec_ver",
     ]
 
-    def encode_partition(batches):
-        for urls, ts_us, vals in _url_runs(batches, ts_col, (value_col,)):
-            v = vals[value_col]
-            rows = []
-            for s, e in zip(*_run_bounds(urls)):
-                t_g, v_g = ts_us[s:e], v[s:e]
-                order = np.argsort(t_g, kind="stable")
-                t_g, v_g = t_g[order], v_g[order]
-                ts_blob, val_blob = encode_series(t_g, v_g)
-                rows.append(
-                    (
-                        urls[s],
-                        tier,
-                        pd.Timestamp(t_g[0] * 1000),
-                        pd.Timestamp(t_g[-1] * 1000),
-                        e - s,
-                        ts_blob,
-                        val_blob,
-                        CODEC_VERSION,
-                    )
+    def encode(pdf: pd.DataFrame) -> pd.DataFrame:
+        urls = pdf["url"].to_numpy()
+        v = pdf[value_col].to_numpy(dtype="float64")
+        rows = []
+        for s, e, t_g, order in _sorted_runs(pdf, ts_col, "url"):
+            ts_blob, val_blob = encode_series(t_g, v[s:e][order])
+            rows.append(
+                (
+                    urls[s],
+                    tier,
+                    pd.Timestamp(t_g[0] * 1000),
+                    pd.Timestamp(t_g[-1] * 1000),
+                    e - s,
+                    ts_blob,
+                    val_blob,
+                    CODEC_VERSION,
                 )
-            if rows:
-                yield pd.DataFrame(rows, columns=out_cols)
+            )
+        return pd.DataFrame(rows, columns=out_cols)
 
-    src = tier_df
-    if "gap_filled" in tier_df.columns:
-        src = src.filter(~F.col("gap_filled"))
-    proj = src.select("url", ts_col, F.col(value_col).cast("double").alias(value_col))
-    if presorted:
-        # url-bucketed, url-sorted input (write_bucketed_tier): zero-shuffle
-        return proj.mapInPandas(encode_partition, schema=BLOBS_SCHEMA)
-    return (
-        proj.repartition("url")
-        .sortWithinPartitions("url", ts_col)
-        .mapInPandas(encode_partition, schema=BLOBS_SCHEMA)
+    proj = _real_points(tier_df).select(
+        "url", ts_col, F.col(value_col).cast("double").alias(value_col)
     )
+    return map_key_runs(proj, "url", [ts_col], encode, BLOBS_SCHEMA, presorted)
 
 
 def decode_blobs(blobs: DataFrame) -> DataFrame:
@@ -238,7 +213,6 @@ def encode_tier_blobs(
     tier: str,
     stat_cols: tuple[str, ...] = ("cnt", "sum_len", "min_len", "max_len", "sum_ts"),
     ts_col: str = "bucket_ts",
-    presorted: bool = False,
 ) -> DataFrame:
     """Numeric tier archive: one timestamp stream + one Gorilla stream PER
     STAT per (url, tier) — unlike :func:`encode_blobs` (single value
@@ -254,65 +228,42 @@ def encode_tier_blobs(
     so writing BOTH archives lets the tier parquet age out entirely with
     no information loss (asserted end-to-end in tests/test_codec.py).
 
-    Same shuffle-free-capable physical plan as encode_blobs (url
-    repartition+sort, or presorted scan; numpy boundary slicing per batch).
+    Same physical plan as encode_blobs (url runs via map_key_runs).
     Ints ride the float codec via exact int64->float64 widening (lossless
     to 2^53 — tier counts/sums, incl. summed epoch seconds, are far below).
     """
-
     cols = ["url", "tier", "start_ts", "end_ts", "n_points", "ts_blob",
             "stat_blobs", "codec_ver"]
 
-    def encode_partition(batches):
-        from yatsm_spark.functions.codec import encode_dod, encode_gorilla
-
-        for urls, ts_us, stats in _url_runs(batches, ts_col, stat_cols):
-            rows = []
-            for s, e in zip(*_run_bounds(urls)):
-                t_g = ts_us[s:e]
-                order = np.argsort(t_g, kind="stable")
-                t_g = t_g[order]
-                blobs = {
-                    c: encode_gorilla(stats[c][s:e][order]) for c in stat_cols
-                }
-                rows.append(
-                    (
-                        urls[s],
-                        tier,
-                        pd.Timestamp(t_g[0] * 1000),
-                        pd.Timestamp(t_g[-1] * 1000),
-                        e - s,
-                        encode_dod(t_g),
-                        blobs,
-                        CODEC_VERSION,
-                    )
+    def encode(pdf: pd.DataFrame) -> pd.DataFrame:
+        urls = pdf["url"].to_numpy()
+        stats = {c: pdf[c].to_numpy(dtype="float64") for c in stat_cols}
+        rows = []
+        for s, e, t_g, order in _sorted_runs(pdf, ts_col, "url"):
+            rows.append(
+                (
+                    urls[s],
+                    tier,
+                    pd.Timestamp(t_g[0] * 1000),
+                    pd.Timestamp(t_g[-1] * 1000),
+                    e - s,
+                    encode_dod(t_g),
+                    {c: encode_gorilla(v[s:e][order]) for c, v in stats.items()},
+                    CODEC_VERSION,
                 )
-            if rows:
-                yield pd.DataFrame(rows, columns=cols)
+            )
+        return pd.DataFrame(rows, columns=cols)
 
-    src = tier_df
-    if "gap_filled" in tier_df.columns:
-        src = src.filter(~F.col("gap_filled"))
-    proj = src.select(
+    proj = _real_points(tier_df).select(
         "url", ts_col, *[F.col(c).cast("double").alias(c) for c in stat_cols]
     )
-    if presorted:
-        return proj.mapInPandas(encode_partition, schema=TIER_BLOBS_SCHEMA)
-    return (
-        proj.repartition("url")
-        .sortWithinPartitions("url", ts_col)
-        .mapInPandas(encode_partition, schema=TIER_BLOBS_SCHEMA)
-    )
+    return map_key_runs(proj, "url", [ts_col], encode, TIER_BLOBS_SCHEMA)
 
 
 LANG_BLOBS_SCHEMA = (
     "url string, tier string, lang string, start_ts timestamp, end_ts timestamp, "
     "n_points int, ts_blob binary, cnt_blob binary, codec_ver int"
 )
-
-# separator for the synthetic (url, lang) run key fed through _url_runs —
-# \x01 cannot appear in a url or a lang code
-_LANG_KEY_SEP = "\x01"
 
 
 def encode_lang_blobs(
@@ -324,58 +275,36 @@ def encode_lang_blobs(
     stats ride :func:`encode_tier_blobs`; this holds the map column's
     history).  Counts are tiny ints so the XOR stream is near-free.
 
-    Physical plan mirrors the other encoders: one url shuffle (all of a
-    url's languages co-locate with its other per-url work), partition
-    sort on (url, lang, ts), ``mapInPandas`` with run slicing — the
-    (url, lang) composite rides the shared ``_url_runs`` iterator as a
-    single separator-joined key column."""
-
+    Physical plan mirrors the other encoders: map_key_runs over the
+    exploded map, keyed on the (url, lang) run — each run encodes
+    independently."""
     cols = ["url", "tier", "lang", "start_ts", "end_ts", "n_points",
             "ts_blob", "cnt_blob", "codec_ver"]
 
-    def encode_partition(batches):
-        from yatsm_spark.functions.codec import encode_dod, encode_gorilla
-
-        for keys, ts_us, vals in _url_runs(batches, ts_col, ("cnt",)):
-            cnts = vals["cnt"]
-            rows = []
-            for s, e in zip(*_run_bounds(keys)):
-                t_g = ts_us[s:e]
-                order = np.argsort(t_g, kind="stable")
-                t_g = t_g[order]
-                url, lang = keys[s].split(_LANG_KEY_SEP, 1)
-                rows.append(
-                    (
-                        url,
-                        tier,
-                        lang,
-                        pd.Timestamp(t_g[0] * 1000),
-                        pd.Timestamp(t_g[-1] * 1000),
-                        e - s,
-                        encode_dod(t_g),
-                        encode_gorilla(cnts[s:e][order]),
-                        CODEC_VERSION,
-                    )
+    def encode(pdf: pd.DataFrame) -> pd.DataFrame:
+        urls, langs = pdf["url"].to_numpy(), pdf["lang"].to_numpy()
+        cnts = pdf["cnt"].to_numpy(dtype="float64")
+        rows = []
+        for s, e, t_g, order in _sorted_runs(pdf, ts_col, "url", "lang"):
+            rows.append(
+                (
+                    urls[s],
+                    tier,
+                    langs[s],
+                    pd.Timestamp(t_g[0] * 1000),
+                    pd.Timestamp(t_g[-1] * 1000),
+                    e - s,
+                    encode_dod(t_g),
+                    encode_gorilla(cnts[s:e][order]),
+                    CODEC_VERSION,
                 )
-            if rows:
-                yield pd.DataFrame(rows, columns=cols)
+            )
+        return pd.DataFrame(rows, columns=cols)
 
-    src = tier_df
-    if "gap_filled" in tier_df.columns:
-        src = src.filter(~F.col("gap_filled"))
-    proj = (
-        src.select("url", ts_col, F.explode("lang_dist").alias("lang", "cnt"))
-        .select(
-            F.concat_ws(_LANG_KEY_SEP, "url", "lang").alias("url"),
-            ts_col,
-            F.col("cnt").cast("double").alias("cnt"),
-        )
-    )
-    return (
-        proj.repartition(F.split("url", _LANG_KEY_SEP).getItem(0))
-        .sortWithinPartitions("url", ts_col)
-        .mapInPandas(encode_partition, schema=LANG_BLOBS_SCHEMA)
-    )
+    proj = _real_points(tier_df).select(
+        "url", ts_col, F.explode("lang_dist").alias("lang", "cnt")
+    ).withColumn("cnt", F.col("cnt").cast("double"))
+    return map_key_runs(proj, ("url", "lang"), [ts_col], encode, LANG_BLOBS_SCHEMA)
 
 
 def decode_lang_blobs(blobs: DataFrame) -> DataFrame:

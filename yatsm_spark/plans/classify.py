@@ -58,7 +58,10 @@ def train_segment_classifier(
     rf = RandomForestClassifier(
         numTrees=n_trees, maxDepth=max_depth, seed=SEED, labelCol="label"
     )
-    return rf.fit(assembled)
+    # copy() drops the training summary, which references the session:
+    # once the session has served a df.observe, the session (and so the
+    # model closed over by transform's UDF) no longer serializes
+    return rf.fit(assembled).copy()
 
 
 def classify_segments(

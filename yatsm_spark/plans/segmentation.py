@@ -1,18 +1,19 @@
-"""Distributed CCDC segmentation: groupBy(url).applyInPandas over the kernels.
+"""Distributed CCDC segmentation: per-url kernels over url runs.
 
 The Spark-side analog of the reference's per-pixel loop in
-yatsm/cli/line.py + algorithms/ccdc.py::CCDCesque.fit [U] — one Arrow batch
-per url series, pure-numpy kernels inside (functions/ccdc.py), structured
+yatsm/cli/line.py + algorithms/ccdc.py::CCDCesque.fit [U] — url runs of a
+url-sorted partition fed to ``mapInPandas`` (plans/__init__.py::
+map_key_runs), pure-numpy kernels inside (functions/ccdc.py), structured
 ``segments`` rows out (SURVEY.md §1.2 segments schema).
 
 Scale notes:
-  * ONE shuffle (hash on url).  Group size is bounded by construction when
-    the input is a rollup tier (a decade of 1d buckets is ~3.7k rows), so a
-    group always fits an Arrow batch; groups beyond ``max_group_rows``
-    (raw hourly series of giant urls) are fit split-and-stitch
-    (functions/ccdc.py::fit_series_chunked) — per-window work stays
-    bounded and the result is EXACTLY the single-pass fit, because CCDC
-    restarts memoryless at every confirmed break.
+  * At most one shuffle (hash on url; none over a url-bucketed, url-sorted
+    table).  Group size is bounded by construction when the input is a
+    rollup tier (a decade of 1d buckets is ~3.7k rows); groups beyond
+    ``max_group_rows`` (raw hourly series of giant urls) are fit
+    split-and-stitch (functions/ccdc.py::fit_series_chunked) — per-window
+    work stays bounded and the result is EXACTLY the single-pass fit,
+    because CCDC restarts memoryless at every confirmed break.
   * The kernels are O(n·k²) per group and embarrassingly parallel across
     urls — exactly the reference's parallelism model, minus its external
     process scheduler (Spark tasks replace GNU parallel).
@@ -28,6 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from yatsm_spark.functions.ccdc import CCDCParams, fit_series_chunked
+from yatsm_spark.plans import _run_bounds, map_key_runs
 
 SEGMENTS_SCHEMA = (
     "url string, seg_id int, start_ts timestamp, end_ts timestamp, "
@@ -46,15 +48,41 @@ def _days_to_ts(days: float):
     return pd.Timestamp(round(days * _SECONDS_PER_DAY * 1e6), unit="us")
 
 
-def _make_fit_and_rows(
-    params: CCDCParams, ts_col: str, value_col: str, max_group_rows: int = 50_000
-):
-    """The two halves of per-group segmentation: fit (kernels) and
-    row-building.  Split so the partition runner can batch the K8 omission
-    tests ACROSS groups between the halves."""
+def segment_series(
+    series: DataFrame,
+    params: CCDCParams | None = None,
+    ts_col: str = "bucket_ts",
+    value_col: str = "mean_len",
+    presorted: bool = False,
+    max_group_rows: int = 50_000,
+) -> DataFrame:
+    """Run CCDC segmentation per url over a (url, ts, value) DataFrame.
 
-    def fit_group(pdf: pd.DataFrame, collect: list | None = None):
-        url = pdf["url"].iloc[0]
+    Typical input: ``rollup(clean, '1d')`` with gap rows excluded — the
+    1d tier bounds group size and regularizes cadence, mirroring how the
+    reference fits on per-date composites.  ``presorted`` declares the
+    input url-contiguous and (url, ts)-sorted (a url-bucketed table from
+    sources/storage.py::write_bucketed_tier): the kernel stage then runs
+    with ZERO shuffle, scan -> mapInPandas.
+    """
+    params = params or CCDCParams()
+    src = series
+    if "gap_filled" in series.columns:
+        src = src.filter(~F.col("gap_filled"))
+    # Rollup tiers carry sum_ts (sum of obs epochs): fit at the TRUE mean
+    # observation time per bucket, not the bucket label — an obs at 23:59
+    # lands in this bucket but a day from its start, which would alias any
+    # signal with period near the tier width.
+    if ts_col == "bucket_ts" and {"sum_ts", "cnt"} <= set(src.columns):
+        src = src.withColumn(
+            "_obs_ts",
+            F.timestamp_seconds((F.col("sum_ts") / F.col("cnt")).cast("double")),
+        )
+        ts_col = "_obs_ts"
+    src = src.select("url", ts_col, value_col)
+    batch_omission = params.omission_alpha > 0
+
+    def fit_group(pdf: pd.DataFrame, collect: list | None):
         pdf = pdf.sort_values(ts_col, kind="mergesort")
         t = pdf[ts_col].astype("int64").to_numpy() / 1e9 / _SECONDS_PER_DAY
         y = pdf[value_col].to_numpy(dtype=np.float64)
@@ -63,10 +91,9 @@ def _make_fit_and_rows(
         # windows of max_group_rows, committing only break-confirmed
         # segments and re-fitting from the last break — EXACTLY equal to
         # the single-pass fit (see fit_series_chunked), no downsampling
-        segs = fit_series_chunked(
+        return fit_series_chunked(
             t[ok], y[ok], params, chunk_rows=max_group_rows, omission_collect=collect
         )
-        return url, segs
 
     def rows_for(url, segs) -> pd.DataFrame:
         rows = []
@@ -95,60 +122,19 @@ def _make_fit_and_rows(
                 out[c] = pd.to_datetime(out[c])
         return out
 
-    return fit_group, rows_for
-
-
-def make_segmenter(params: CCDCParams, ts_col: str, value_col: str, max_group_rows: int = 50_000):
-    """Build the per-group pandas function (closure keeps params picklable)."""
-    fit_group, rows_for = _make_fit_and_rows(params, ts_col, value_col, max_group_rows)
-
-    def segment_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        return rows_for(*fit_group(pdf))
-
-    return segment_group
-
-
-def segment_series(
-    series: DataFrame,
-    params: CCDCParams | None = None,
-    ts_col: str = "bucket_ts",
-    value_col: str = "mean_len",
-    presorted: bool = False,
-    max_group_rows: int = 50_000,
-) -> DataFrame:
-    """Run CCDC segmentation per url over a (url, ts, value) DataFrame.
-
-    Typical input: ``rollup(clean, '1d')`` with gap rows excluded — the
-    1d tier bounds group size and regularizes cadence, mirroring how the
-    reference fits on per-date composites.
-    """
-    params = params or CCDCParams()
-    src = series
-    if "gap_filled" in series.columns:
-        src = src.filter(~F.col("gap_filled"))
-    # Rollup tiers carry sum_ts (sum of obs epochs): fit at the TRUE mean
-    # observation time per bucket, not the bucket label — an obs at 23:59
-    # lands in this bucket but a day from its start, which would alias any
-    # signal with period near the tier width.
-    if ts_col == "bucket_ts" and {"sum_ts", "cnt"} <= set(src.columns):
-        src = src.withColumn(
-            "_obs_ts",
-            F.timestamp_seconds((F.col("sum_ts") / F.col("cnt")).cast("double")),
-        )
-        ts_col = "_obs_ts"
-    src = src.select("url", ts_col, value_col)
-    fit_group, rows_for = _make_fit_and_rows(params, ts_col, value_col, max_group_rows)
-    batch_omission = params.omission_alpha > 0
-
-    def flush_block(pdf_block: pd.DataFrame) -> pd.DataFrame | None:
-        # fit every group in the block first, batching the K8 omission
-        # tests across ALL groups' segments: one recresid_batch sweep
+    def segment_block(pdf: pd.DataFrame) -> pd.DataFrame | None:
+        # fit every url in the block first, batching the K8 omission
+        # tests across ALL urls' segments: one recresid_batch sweep
         # amortizes the sequential recursive-residual loop (the kernel
         # stack's hottest path — cusum was ~47% of fit wall at realistic
-        # series lengths) over the whole Arrow batch.  Bit-identical to
+        # series lengths) over the whole block.  Bit-identical to
         # per-segment scoring (pinned by tests).
         collect: list | None = [] if batch_omission else None
-        fitted = [fit_group(g, collect) for _, g in pdf_block.groupby("url", sort=False)]
+        urls = pdf["url"].to_numpy()
+        fitted = [
+            (urls[s], fit_group(pdf.iloc[s:e], collect))
+            for s, e in zip(*_run_bounds(urls))
+        ]
         if collect:
             from yatsm_spark.functions.ccdc import cusum_omission_batch
 
@@ -164,36 +150,6 @@ def segment_series(
         frames = [f for f in frames if not f.empty]
         return pd.concat(frames, ignore_index=True) if frames else None
 
-    def segment_partition(batches):
-        # partition-batched grouped map (same pattern as plans/blobs.py):
-        # rows arrive sorted by (url, ts); groups contiguous; the last url
-        # of each Arrow batch may continue in the next, so it is held back.
-        pending: pd.DataFrame | None = None
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            if pending is not None:
-                pdf = pd.concat([pending, pdf], ignore_index=True)
-            last_url = pdf["url"].iloc[-1]
-            tail = pdf["url"].to_numpy() == last_url
-            complete, pending = pdf[~tail], pdf[tail]
-            if not complete.empty:
-                out = flush_block(complete)
-                if out is not None:
-                    yield out
-        if pending is not None and not pending.empty:
-            out = flush_block(pending)
-            if out is not None:
-                yield out
-
-    if presorted:
-        # caller contract: input partitions are already url-contiguous and
-        # (url, ts)-sorted — e.g. a url-bucketed, url-sorted table
-        # (sources/storage.py::write_bucketed_tier).  Kernel stage runs
-        # with ZERO shuffle: scan -> mapInPandas.
-        return src.mapInPandas(segment_partition, schema=SEGMENTS_SCHEMA)
-    return (
-        src.repartition("url")
-        .sortWithinPartitions("url", ts_col)
-        .mapInPandas(segment_partition, schema=SEGMENTS_SCHEMA)
+    return map_key_runs(
+        src, "url", [ts_col], segment_block, SEGMENTS_SCHEMA, presorted
     )

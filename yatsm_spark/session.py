@@ -15,9 +15,6 @@ from pyspark.sql import SparkSession
 _CORRECTNESS_CONFS = {
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
-    # One url's whole series must fit one Arrow batch for applyInPandas
-    # kernels; groups are bounded upstream (see plans/segmentation.py).
-    "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
 }
 
 # Perf confs — overridable via extra_confs.
@@ -27,7 +24,31 @@ _PERF_CONFS = {
     "spark.sql.adaptive.skewJoin.enabled": "true",
     "spark.ui.enabled": "false",
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+    # Rows per Arrow batch handed to a pandas kernel: large enough to
+    # amortize the per-batch Python call over many url runs, small enough
+    # to bound worker memory.  Runs that cross a batch are carried over
+    # (plans/__init__.py::map_key_runs), so results do not depend on it.
+    "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
 }
+
+
+def _local_cores() -> int:
+    """Cores this process may run on (the affinity mask, not the host)."""
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:  # no sched_getaffinity (macOS)
+        return os.cpu_count() or 8
+
+
+def _default_driver_mem() -> str:
+    """~40% of physical RAM (capped at 48g), so one driver JVM plus its
+    Python workers fit the box; 4g where /proc/meminfo is unavailable."""
+    try:
+        with open("/proc/meminfo") as f:
+            kib = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError, IndexError):
+        return "4g"
+    return f"{max(1024, min(48 * 1024, int(kib * 0.4) // 1024))}m"
 
 
 def get_spark(
@@ -42,7 +63,8 @@ def get_spark(
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default all
     cores).  ``shuffle_partitions`` defaults to 2x the local core count so
     AQE has room to coalesce — on a real cluster pass an explicit value
-    sized to the input (~128 MB per post-shuffle partition).
+    sized to the input (~128 MB per post-shuffle partition).  The driver
+    heap is ``$YATSM_SPARK_DRIVER_MEM`` or ~40% of physical RAM.
     """
     # local-mode Python workers must be able to import yatsm_spark no matter
     # where the driver was launched from; on a real cluster this is replaced
@@ -59,7 +81,7 @@ def get_spark(
     builder = SparkSession.builder.appName(app_name).master(master)
 
     if shuffle_partitions is None:
-        ncores = os.cpu_count() or 8
+        ncores = _local_cores()
         if master.startswith("local["):
             inner = master[6:-1]
             if inner.isdigit():
@@ -67,7 +89,7 @@ def get_spark(
         shuffle_partitions = max(8, 2 * ncores)
     builder = builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
 
-    driver_mem = os.environ.get("YATSM_SPARK_DRIVER_MEM", "48g")
+    driver_mem = os.environ.get("YATSM_SPARK_DRIVER_MEM") or _default_driver_mem()
     builder = builder.config("spark.driver.memory", driver_mem)
 
     for k, v in {**_PERF_CONFS, **(extra_confs or {}), **_CORRECTNESS_CONFS}.items():
