@@ -2786,7 +2786,7 @@ SELECT doc_id,
 FROM h
 """
 
-_URL_CANON = """
+_URL_CANON = r"""
 WITH raw AS (
   SELECT c_custkey,
          CASE WHEN c_custkey % 7 = 0

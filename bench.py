@@ -9,8 +9,10 @@ Runs a representative subset of __spark_entry__.queries() at
 Each query is forced end-to-end with a noop-format write (count() would let
 Catalyst prune the projections we mean to measure).  Also reports the crawl
 rollup tier throughput (rolled-up points/sec, BASELINE.md metric) computed
-from the tier row counts; the N-vs-4N scaling-efficiency evidence lives in
-scripts/bench_scaling.py -> BENCH/BASELINE.md.
+from the tier row counts.  The core sweep is this script run with
+``SPARK_GRAFT_CPUS`` set to 1, 2 and 4; the per-layer profile (stage time,
+shuffle bytes, Python-worker costs) comes from ``perfbench/run.py`` with
+``--trace 1``.
 """
 
 from __future__ import annotations
@@ -126,7 +128,7 @@ def main() -> None:
         timings[name] = round(best, 3)
 
     # tier throughput: rolled-up points/sec for the 1h tier over events
-    # (BASELINE.md metric; the crawl-table variant is in bench_scaling.py)
+    # (BASELINE.md metric)
     from yatsm_spark.operators.series import rollup_series
 
     t0 = time.time()

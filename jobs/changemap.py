@@ -42,10 +42,14 @@ def main() -> None:
     ap.add_argument(
         "--tiff", default=None,
         help="ALSO write the result as a url-bucket x month raster TIFF "
-        "(S6 map sink, own GDAL-free codec); value = output path",
+        "(S6 map sink, own GDAL-free codec; --mode summary only); "
+        "value = output path",
     )
     ap.add_argument("--tiff-buckets", type=int, default=256)
     args = ap.parse_args()
+    if args.tiff and args.mode != "summary":
+        ap.error(f"--tiff rasterizes the summary breaks; it needs "
+                 f"--mode summary, not {args.mode}")
 
     spark = get_spark("yatsm_spark_changemap", master=args.master)
     segs = spark.read.parquet(args.segments)
@@ -59,7 +63,7 @@ def main() -> None:
         out = predict_at(segs, args.at or args.start)
     out.write.mode("overwrite").parquet(args.output)
     print(f"{args.mode}: {spark.read.parquet(args.output).count()} rows -> {args.output}")
-    if args.tiff and args.mode == "summary":
+    if args.tiff:
         from yatsm_spark.operators.changemap import write_map_tiff
 
         grid = (

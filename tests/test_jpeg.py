@@ -161,6 +161,22 @@ def test_jpeg_rejects_progressive_and_corrupt():
         decode_baseline_jpeg(b"\xff\xd8\xff\xe0junk")
     with pytest.raises(ValueError):
         decode_baseline_jpeg(encode_baseline_jpeg(img)[:40])  # truncated
+    # DHT segments stripped: the scan names Huffman tables that were never
+    # defined (a missing-table lookup, not an IndexError)
+    clean = encode_baseline_jpeg(img)
+    no_dht, pos = bytearray(clean[:2]), 2
+    while clean[pos + 1] != 0xDA:
+        seglen = struct.unpack_from(">H", clean, pos + 2)[0]
+        if clean[pos + 1] != 0xC4:
+            no_dht += clean[pos : pos + 2 + seglen]
+        pos += 2 + seglen
+    with pytest.raises(ValueError):
+        decode_baseline_jpeg(bytes(no_dht + clean[pos:]))
+    # SOS names a component id the frame header never declared
+    bad_sos = bytearray(clean)
+    bad_sos[bad_sos.find(b"\xff\xda") + 5] = 0x7F
+    with pytest.raises(ValueError):
+        decode_baseline_jpeg(bytes(bad_sos))
 
 
 def test_jpeg_dims_agree_with_header_parser(spark):
@@ -432,6 +448,11 @@ def test_gif_rejects_corrupt():
         decode_gif(full[:12])
     with pytest.raises(ValueError):
         decode_gif(full[:40])
+    # first LZW code after the clear is 7 > eoi (5): no table entry for it.
+    # Header + 4-entry palette + image descriptor + min-code-size byte, then
+    # one sub-block packing codes 4 (clear) and 7 at width 3.
+    with pytest.raises(ValueError):
+        decode_gif(full[: 13 + 3 * 4 + 10 + 1] + b"\x01\x3c\x00\x3b")
 
 
 def test_decode_image_real_for_gif(spark):

@@ -57,6 +57,27 @@ def test_rasterize_pixel_cap(spark):
         rasterize(df, "x", "y", "v", max_pixels=99)
 
 
+def test_rasterize_reads_input_once(spark):
+    """The counts and collects share one materialization of the input: a
+    Python UDF that makes the x column runs once per input row, not once
+    per pass that reads x."""
+    from pyspark.sql import functions as F
+
+    calls = spark.sparkContext.accumulator(0)
+
+    @F.udf("long")
+    def make_x(i):
+        calls.add(1)
+        return i % 4
+
+    df = spark.range(12).select(
+        make_x("id").alias("x"), F.floor(F.col("id") / 4).alias("y"), F.lit(1.0).alias("v")
+    )
+    grid, ys, xs = rasterize(df, "x", "y", "v")
+    assert (ys, xs) == ([0, 1, 2], [0, 1, 2, 3]) and grid.sum() == 12.0
+    assert calls.value == 12
+
+
 def test_write_map_tiff_from_changemap(spark, tmp_path):
     """End-to-end S6 analog: changemap-style aggregate -> url-bucket x
     month raster -> TIFF on disk -> read back equals the aggregate."""
@@ -82,3 +103,27 @@ def test_write_map_tiff_from_changemap(spark, tmp_path):
     expect, _, _ = rasterize(grid_df, "month", "bucket", "breaks")
     assert np.array_equal(back, expect)
     assert tags == {}  # no invented georeferencing
+
+
+def test_changemap_job_rejects_tiff_outside_summary(monkeypatch, tmp_path):
+    """--tiff only has a raster to write in summary mode; any other mode
+    must fail at argument parsing, before a session starts."""
+    import importlib.util
+    import sys
+    from pathlib import Path
+
+    path = Path(__file__).resolve().parent.parent / "jobs" / "changemap.py"
+    spec = importlib.util.spec_from_file_location("changemap_job", path)
+    job = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(job)
+
+    def no_session(*a, **k):
+        raise AssertionError("a Spark session was started")
+
+    monkeypatch.setattr(job, "get_spark", no_session)
+    monkeypatch.setattr(sys, "argv", [
+        "changemap.py", "--segments", str(tmp_path / "segs"), "--output",
+        str(tmp_path / "out"), "--mode", "magnitude", "--tiff", str(tmp_path / "m.tif"),
+    ])
+    with pytest.raises(SystemExit):
+        job.main()

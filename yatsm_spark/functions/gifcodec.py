@@ -29,6 +29,8 @@ import struct
 
 import numpy as np
 
+from yatsm_spark.functions import decode_guard
+
 
 # --------------------------------------------------------------- decode
 
@@ -113,7 +115,8 @@ def _deinterlace(idx: np.ndarray) -> np.ndarray:
     return out
 
 
-def _decode_gif_impl(data: bytes) -> np.ndarray:
+@decode_guard
+def decode_gif(data: bytes) -> np.ndarray:
     """Decode the FIRST frame of a GIF to (h, w, 3) uint8 RGB.  Raises
     ValueError on corrupt/truncated streams or a frame without any
     color table."""
@@ -268,15 +271,3 @@ def encode_gif(idx: np.ndarray, palette: np.ndarray, interlace: bool = False) ->
     out += wtr.finish()
     out += b"\x3b"
     return bytes(out)
-
-
-def decode_gif(data: bytes):
-    """Public entry: any parse failure on malformed bytes — including
-    struct/index errors from truncated headers — surfaces as ValueError,
-    the error type the multimodal stub-policy wrappers absorb."""
-    import struct as _struct
-
-    try:
-        return _decode_gif_impl(data)
-    except (_struct.error, IndexError) as exc:
-        raise ValueError(f"malformed image bytes: {exc}") from exc

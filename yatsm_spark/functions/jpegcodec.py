@@ -50,6 +50,8 @@ import struct
 
 import numpy as np
 
+from yatsm_spark.functions import decode_guard
+
 # --------------------------------------------------------------- tables
 
 # ITU-T T.81 Annex K.1/K.2 example quantization tables (luma, chroma),
@@ -494,7 +496,8 @@ def dequantize_to_plane(
     return px.transpose(0, 2, 1, 3).reshape(by * 8, bx * 8)
 
 
-def _decode_baseline_jpeg_impl(data: bytes) -> np.ndarray:
+@decode_guard
+def decode_baseline_jpeg(data: bytes) -> np.ndarray:
     """Decode a baseline JPEG to (h, w, 3) uint8 RGB, or (h, w) uint8
     for single-component (grayscale) scans.  Raises ValueError on
     progressive/arithmetic/12-bit streams and on corrupt data."""
@@ -634,15 +637,3 @@ def _decode_scan(data, pos, frame, scan, qtables, htables, restart_interval):
     ycc = np.stack([planes[c["id"]] for c, _, _ in scan], axis=-1)
     rgb = ycbcr_to_rgb(ycc)
     return np.clip(np.round(rgb), 0, 255).astype(np.uint8)
-
-
-def decode_baseline_jpeg(data: bytes):
-    """Public entry: any parse failure on malformed bytes — including
-    struct/index errors from truncated headers — surfaces as ValueError,
-    the error type the multimodal stub-policy wrappers absorb."""
-    import struct as _struct
-
-    try:
-        return _decode_baseline_jpeg_impl(data)
-    except (_struct.error, IndexError) as exc:
-        raise ValueError(f"malformed image bytes: {exc}") from exc

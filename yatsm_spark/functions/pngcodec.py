@@ -22,12 +22,15 @@ import zlib
 
 import numpy as np
 
+from yatsm_spark.functions import decode_guard
+
 _SIG = b"\x89PNG\r\n\x1a\n"
 # samples per pixel by color type
 _CHANNELS = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}
 
 
-def _decode_png_impl(data: bytes) -> np.ndarray:
+@decode_guard
+def decode_png(data: bytes) -> np.ndarray:
     """Decode a PNG to (h, w, channels) uint8 (channels per color type;
     palette rows are expanded to RGB).  Raises ValueError on unsupported
     or corrupt streams."""
@@ -152,15 +155,3 @@ def encode_png(img: np.ndarray) -> bytes:
         + _chunk(b"IDAT", zlib.compress(rows.tobytes(), 9))
         + _chunk(b"IEND", b"")
     )
-
-
-def decode_png(data: bytes):
-    """Public entry: any parse failure on malformed bytes — including
-    struct/index errors from truncated headers — surfaces as ValueError,
-    the error type the multimodal stub-policy wrappers absorb."""
-    import struct as _struct
-
-    try:
-        return _decode_png_impl(data)
-    except (_struct.error, IndexError) as exc:
-        raise ValueError(f"malformed image bytes: {exc}") from exc

@@ -118,23 +118,29 @@ def rasterize(
     """
     import numpy as np
 
-    # COUNT the axes before collecting them: the cap must bound every
-    # driver-side materialization, including the axis label lists
-    nx = df.select(x_col).distinct().count()
-    ny = df.select(y_col).distinct().count()
-    if nx * ny > max_pixels:
-        raise ValueError(
-            f"rasterize: {ny}x{nx} grid exceeds max_pixels="
-            f"{max_pixels}; aggregate to a coarser grid first"
-        )
-    xs = [r[0] for r in df.select(x_col).distinct().orderBy(x_col).collect()]
-    ys = [r[0] for r in df.select(y_col).distinct().orderBy(y_col).collect()]
-    xi = {v: i for i, v in enumerate(xs)}
-    yi = {v: i for i, v in enumerate(ys)}
-    grid = np.full((len(ys), len(xs)), float(fill), dtype=np.float64)
-    for r in df.select(y_col, x_col, val_col).collect():
-        if r[2] is not None:
-            grid[yi[r[0]], xi[r[1]]] = float(r[2])
+    # one pass over the input: every count and collect below reads this
+    # slim projection, not the upstream plan
+    slim = df.select(y_col, x_col, val_col).persist()
+    try:
+        # COUNT the axes before collecting them: the cap must bound every
+        # driver-side materialization, including the axis label lists
+        nx = slim.select(x_col).distinct().count()
+        ny = slim.select(y_col).distinct().count()
+        if nx * ny > max_pixels:
+            raise ValueError(
+                f"rasterize: {ny}x{nx} grid exceeds max_pixels="
+                f"{max_pixels}; aggregate to a coarser grid first"
+            )
+        xs = [r[0] for r in slim.select(x_col).distinct().orderBy(x_col).collect()]
+        ys = [r[0] for r in slim.select(y_col).distinct().orderBy(y_col).collect()]
+        xi = {v: i for i, v in enumerate(xs)}
+        yi = {v: i for i, v in enumerate(ys)}
+        grid = np.full((len(ys), len(xs)), float(fill), dtype=np.float64)
+        for r in slim.collect():
+            if r[2] is not None:
+                grid[yi[r[0]], xi[r[1]]] = float(r[2])
+    finally:
+        slim.unpersist()
     return grid, ys, xs
 
 

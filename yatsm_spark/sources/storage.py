@@ -22,7 +22,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 N_BUCKETS = 16  # sandbox default; production: 1024+ (see datagen.N_BUCKETS)
@@ -65,10 +65,6 @@ def write_table(df: DataFrame, target: str, partition_cols: tuple[str, ...] = ("
             writer.append()
     else:
         staged.write.mode(mode).partitionBy(*partition_cols).parquet(target)
-
-
-def read_table(spark: SparkSession, target: str) -> DataFrame:
-    return spark.table(target) if use_iceberg() else spark.read.parquet(target)
 
 
 def write_bucketed_tier(
