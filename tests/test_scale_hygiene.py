@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import re
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -56,6 +58,22 @@ def test_salt_spreads_hot_key(skewed):
     assert [r["_salt"] for r in cold] == [0]  # cold keys unsalted
 
 
+def _job_tasks(spark, group, fn) -> list[int]:
+    """Run ``fn`` in a fresh job group; the task count of each job it started."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    st = sc.statusTracker()
+    return [
+        sum(info.numTasks for info in map(st.getStageInfo, st.getJobInfo(j).stageIds) if info)
+        for j in st.getJobIdsForGroup(group)
+    ]
+
+
 def test_storage_layout_roundtrip(spark, tmp_path, tiny_crawl):
     path = str(tmp_path / "crawl_tbl")
     df = with_layout(tiny_crawl.drop("p_bucket", "p_day"))
@@ -67,6 +85,21 @@ def test_storage_layout_roundtrip(spark, tmp_path, tiny_crawl):
     got = prune_url(back, url).count()
     want = tiny_crawl.filter(F.col("url") == url).count()
     assert got == want > 0
+    # the bucket is a constant-folded literal: no job computes it, and the
+    # scan prunes to that bucket's directories
+    assert _job_tasks(spark, "prune_url", lambda: prune_url(back, url)) == []
+    plan = prune_url(back, url)._jdf.queryExecution().executedPlan().toString()
+    assert re.search(r"PartitionFilters: \[[^\]]*\(p_bucket#\d+ = \d+\)", plan), plan
+
+
+def test_partition_discovery_starts_no_listing_job(spark, tmp_path):
+    """Past Spark's 32-path threshold a read lists partition directories
+    in a distributed job with one task per directory; in local mode the
+    driver lists them itself."""
+    path = str(tmp_path / "days")
+    spark.range(40).withColumn("p_day", F.col("id")).write.partitionBy("p_day").parquet(path)
+    tasks = _job_tasks(spark, "read_40_dirs", lambda: spark.read.parquet(path))
+    assert max(tasks, default=0) < 40, tasks
 
 
 def test_checkpoint_resume_anti_join(spark, tmp_path):

@@ -154,11 +154,6 @@ def connected_components(
         .filter(F.col("src") != F.col("dst"))
         .distinct()
     )
-    nodes = _checkpoint(
-        cur.select(F.col("src").alias("id"))
-        .union(cur.select(F.col("dst").alias("id")))
-        .distinct()
-    )
 
     def _sig(df: DataFrame) -> tuple:
         """Order-independent edge-set signature: ONE map-side-combinable
@@ -196,18 +191,19 @@ def connected_components(
     else:
         raise RuntimeError(f"connected_components: no convergence in {max_iter} rounds")
 
-    # at fixpoint every edge is (node -> its component minimum); minima
-    # themselves carry no out-edge, so re-attach them with component = self
-    comp = cur.select(F.col("src").alias("id"), F.col("dst").alias("component"))
+    # at fixpoint every non-minimum node has exactly one edge, to its
+    # component minimum, and every minimum is some edge's dst but no
+    # edge's src: the node set is src ∪ dst, and minima map to themselves
+    minima = cur.select(F.col("dst").alias("id")).distinct()
     result = _checkpoint(
-        nodes.join(comp, "id", "left").select(
-            "id", F.coalesce("component", "id").alias("component")
+        cur.select(F.col("src").alias("id"), F.col("dst").alias("component")).union(
+            minima.select("id", F.col("id").alias("component"))
         )
     )
-    # the eager result checkpoint makes nodes + the final edge list dead
-    # too — exactly ONE block set (one row per clustered node) survives
-    # per call; consumers free it with :func:`release_components`
-    _release(cur, nodes)
+    # the eager result checkpoint makes the final edge list dead too —
+    # exactly ONE block set (one row per clustered node) survives per
+    # call; consumers free it with :func:`release_components`
+    _release(cur)
     return result
 
 

@@ -92,7 +92,16 @@ def get_spark(
     driver_mem = os.environ.get("YATSM_SPARK_DRIVER_MEM") or _default_driver_mem()
     builder = builder.config("spark.driver.memory", driver_mem)
 
-    for k, v in {**_PERF_CONFS, **(extra_confs or {}), **_CORRECTNESS_CONFS}.items():
+    perf = dict(_PERF_CONFS)
+    if master == "local" or master.startswith("local["):
+        # List partition directories on the driver.  Past the threshold
+        # (Spark's default: 32 paths) every read of a day-partitioned tier
+        # starts a listing job with one task per directory; in local mode
+        # those tasks run in the driver JVM anyway, and their scheduling
+        # and deserialization cost ~20x the listing itself.  Cluster
+        # masters keep distributed listing for S3-scale trees.
+        perf["spark.sql.sources.parallelPartitionDiscovery.threshold"] = str(2**31 - 1)
+    for k, v in {**perf, **(extra_confs or {}), **_CORRECTNESS_CONFS}.items():
         builder = builder.config(k, v)
 
     if hive:

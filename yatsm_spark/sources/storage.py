@@ -79,14 +79,21 @@ def write_bucketed_tier(
     (`presorted=True` in plans/) — the sandbox analog of Iceberg's
     storage-partitioned join / bucketed scan on a real cluster.
 
-    The pre-write ``repartition(n_buckets, key)`` uses the same
-    Murmur3-mod partitioning as ``bucketBy``, so each writer task holds
-    exactly one bucket and each bucket is ONE file — this is what makes a
-    bucket's scan partition globally (key, ts)-sorted; multiple files per
-    bucket would interleave keys and break group contiguity.
+    The pre-write ``repartition(k, key)`` uses the same Murmur3-mod
+    partitioning as ``bucketBy``, with ``k`` the smallest divisor of
+    ``n_buckets`` that is >= the default parallelism (``n_buckets`` if
+    none): since ``k`` divides ``n_buckets``,
+    ``pmod(h, n_buckets) mod k == pmod(h, k)``, so each bucket lands
+    whole in exactly one writer task, which writes it as ONE file.  That
+    is what makes a bucket's scan partition globally (key, ts)-sorted;
+    multiple files per bucket would interleave keys and break group
+    contiguity.  ``k`` tasks rather than ``n_buckets`` keeps the write
+    from paying per-task overhead for a few rows per bucket.
     """
+    par = df.sparkSession.sparkContext.defaultParallelism
+    k = next((d for d in range(par, n_buckets) if n_buckets % d == 0), n_buckets)
     (
-        df.repartition(n_buckets, F.col(key))
+        df.repartition(k, F.col(key))
         .write.mode("overwrite")
         .bucketBy(n_buckets, key)
         .sortBy(key, ts_col)
@@ -95,9 +102,9 @@ def write_bucketed_tier(
 
 
 def prune_url(df: DataFrame, url: str, n_buckets: int = N_BUCKETS) -> DataFrame:
-    """Point-lookup pruning: fold the url's bucket into a p_bucket literal
-    so the scan touches 1/n_buckets of the files (S3 semantics)."""
-    row = df.sparkSession.range(1).select(
-        F.pmod(F.hash(F.lit(url)), F.lit(n_buckets)).cast("int").alias("b")
-    ).collect()
-    return df.filter((F.col("p_bucket") == row[0]["b"]) & (F.col("url") == url))
+    """Point-lookup pruning: a p_bucket predicate on the url's bucket, which
+    the optimizer constant-folds to a literal partition filter, so the scan
+    touches 1/n_buckets of the files (S3 semantics) and no job runs to
+    compute the bucket."""
+    bucket = F.pmod(F.hash(F.lit(url)), F.lit(n_buckets)).cast("int")
+    return df.filter((F.col("p_bucket") == bucket) & (F.col("url") == url))
