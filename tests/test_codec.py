@@ -80,6 +80,34 @@ def test_version_byte_guard():
         decode_gorilla(bytes(vb))
 
 
+def _inflate_count(blob: bytes, by: int) -> bytes:
+    (n,) = struct.unpack_from("<I", blob, 1)
+    return blob[:1] + struct.pack("<I", n + by) + blob[5:]
+
+
+@pytest.mark.parametrize("codec", ["dod", "gorilla"])
+@pytest.mark.parametrize(
+    "mangle",
+    [
+        lambda b: b[: len(b) // 2],
+        lambda b: b[:9],
+        # +8 points cost >= 8 bits, more than the final byte's zero pad
+        lambda b: _inflate_count(b, 8),
+    ],
+    ids=["truncated_half", "truncated_header", "inflated_count"],
+)
+def test_malformed_blob_raises_value_error(codec, mangle):
+    rng = np.random.default_rng(7)
+    ts = np.cumsum(rng.integers(3000, 4200, 200)).astype(np.int64)
+    v = np.round(rng.normal(100.0, 20.0, 200), 1)
+    blob, decode = {
+        "dod": (encode_dod(ts), decode_dod),
+        "gorilla": (encode_gorilla(v), decode_gorilla),
+    }[codec]
+    with pytest.raises(ValueError):
+        decode(mangle(blob))
+
+
 def test_blob_determinism():
     ts = np.array([0, 100, 250, 400, 900])
     v = np.array([1.0, 2.0, 2.0, -1.5, 8.25])

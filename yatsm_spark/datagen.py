@@ -34,8 +34,9 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from yatsm_spark.sources.storage import N_BUCKETS, with_layout
+
 SEED = 42
-N_BUCKETS = 16  # sandbox analog of Iceberg bucket(url, B); prod would use 1024+
 START_TS = "2024-01-01 00:00:00"
 SIGNAL_PERIOD_DAYS = 7.0
 
@@ -165,11 +166,8 @@ def generate_crawl(
             "html",
             F.encode(F.concat(F.lit("<html><body>"), F.col("text"), F.lit("</body></html>")), "UTF-8"),
         )
-        .withColumn("p_bucket", F.pmod(F.hash("url"), F.lit(N_BUCKETS)).cast("int"))
-        .withColumn("p_day", F.to_date("warc_ts"))
-        .select("url", "warc_ts", "html", "text", "lang", "p_bucket", "p_day")
     )
-    return crawl
+    return with_layout(crawl).select("url", "warc_ts", "html", "text", "lang", "p_bucket", "p_day")
 
 
 def write_crawl(
@@ -289,7 +287,7 @@ def generate_webtext(
         .otherwise("und")
     )
 
-    return (
+    corpus = (
         base.withColumn(
             "text",
             F.when(
@@ -323,7 +321,5 @@ def generate_webtext(
                 F.concat(s("<html><body>"), F.col("text"), s("</body></html>")), "UTF-8"
             ),
         )
-        .withColumn("p_bucket", F.pmod(F.hash("url"), F.lit(N_BUCKETS)).cast("int"))
-        .withColumn("p_day", F.to_date("warc_ts"))
-        .select("url", "warc_ts", "html", "text", "lang", "p_bucket", "p_day")
     )
+    return with_layout(corpus).select("url", "warc_ts", "html", "text", "lang", "p_bucket", "p_day")

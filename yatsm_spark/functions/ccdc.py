@@ -13,7 +13,8 @@ here run per url series (SURVEY.md §2.5):
   K4  rmse               — yatsm/regression/diagnostics.py::rmse [U]
   K5  stable-period train — yatsm/algorithms/ccdc.py::CCDCesque.train [U]
   K6  Shewhart monitor   — yatsm/algorithms/ccdc.py::CCDCesque.monitor [U]
-  K7  dynamic rmse       — yatsm/algorithms/ccdc.py::get_dynamic_rmse [U]
+  K7  dynamic rmse       — not ported: the monitor scales by the K4 rmse
+                           of the stable fit
   K8  recresid + CUSUM   — yatsm/regression/recresid.py [U],
                            postprocess.py::omission_test [U]
   K9  Chow commission    — yatsm/algorithms/postprocess.py::commission_test [U]
@@ -579,24 +580,6 @@ def chow_commission(
         return False
     f_stat = ((ssr_p - ssr_u) / p) / (ssr_u / df2)
     return f_sf(f_stat, p, df2) > alpha  # not significant -> merge
-
-
-# ------------------------------------------------------------ K7 dynamic rmse
-
-
-def dynamic_rmse(
-    t: np.ndarray, resid: np.ndarray, t_now: float, k: int = 24, period: float = PERIOD_DAYS
-) -> float:
-    """K7: rmse from the ``k`` observations nearest in day-of-year to
-    ``t_now`` — seasonal heteroskedasticity guard."""
-    if t.size <= k:
-        return rmse(resid)
-    doy = np.mod(t, period)
-    d_now = math.fmod(t_now, period)
-    dist = np.abs(doy - d_now)
-    dist = np.minimum(dist, period - dist)
-    idx = np.argsort(dist, kind="stable")[:k]
-    return rmse(resid[idx])
 
 
 # ------------------------------------------------------- the segmenter K5+K6

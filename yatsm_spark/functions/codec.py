@@ -43,6 +43,8 @@ import struct
 
 import numpy as np
 
+from yatsm_spark.functions import decode_guard
+
 CODEC_VERSION = 1
 
 # (prefix bits as string, payload bit width, bias) per dod class
@@ -130,11 +132,22 @@ def _field_reader(payload: bytes):
     return read
 
 
+def _check_end(pos: int, payload: bytes) -> None:
+    """Reads past the payload see the zero pad and decode as '0' codes; the
+    encoders pack exactly the bits they code, so a whole blob's parse ends
+    in its last byte (a count inflated by less than that byte's pad cannot
+    be told from '0' codes)."""
+    if (pos + 7) // 8 != len(payload):
+        raise ValueError(f"parse ended at bit {pos} of a {len(payload)}-byte payload")
+
+
+@decode_guard
 def decode_dod(blob: bytes) -> np.ndarray:
     """Inverse of :func:`encode_dod`.
 
     Sequential prefix-code parse with O(1) int ops per point; the final
     double integration (dod -> delta -> ts) is two vectorized cumsums.
+    Malformed or truncated blobs raise ValueError.
     """
     ver, n, t0 = struct.unpack_from("<BIq", blob, 0)
     if ver != CODEC_VERSION:
@@ -144,7 +157,10 @@ def decode_dod(blob: bytes) -> np.ndarray:
     if n == 1:
         return np.array([t0], dtype=np.int64)
     (delta0,) = struct.unpack_from("<q", blob, 13)
-    read = _field_reader(blob[21:])
+    payload = blob[21:]
+    if n - 2 > 8 * len(payload):  # every coded point costs >= 1 bit
+        raise ValueError(f"count {n} overruns a {len(payload)}-byte payload")
+    read = _field_reader(payload)
     dods = np.zeros(n - 2, dtype=np.int64)
     pos = 0
     for i in range(n - 2):
@@ -164,6 +180,7 @@ def decode_dod(blob: bytes) -> np.ndarray:
             raw = read(pos + 4, 64)
             dods[i] = raw - (1 << 64) if raw >= (1 << 63) else raw
             pos += 68
+    _check_end(pos, payload)
     deltas = np.empty(n - 1, dtype=np.int64)
     deltas[0] = delta0
     np.cumsum(dods, out=dods)
@@ -281,15 +298,20 @@ def encode_gorilla(vals: np.ndarray) -> bytes:
     return head + np.packbits(bits).tobytes()
 
 
+@decode_guard
 def decode_gorilla(blob: bytes) -> np.ndarray:
-    """Inverse of :func:`encode_gorilla`."""
+    """Inverse of :func:`encode_gorilla`; malformed or truncated blobs
+    raise ValueError."""
     ver, n = struct.unpack_from("<BI", blob, 0)
     if ver != CODEC_VERSION:
         raise ValueError(f"unsupported codec version {ver}")
     if n == 0:
         return np.empty(0, dtype=np.float64)
     (v0,) = struct.unpack_from("<Q", blob, 5)
-    read = _field_reader(blob[13:])
+    payload = blob[13:]
+    if n - 1 > 8 * len(payload):  # every coded point costs >= 1 bit
+        raise ValueError(f"count {n} overruns a {len(payload)}-byte payload")
+    read = _field_reader(payload)
     xors = np.zeros(n - 1, dtype=np.uint64)
     pos = 0
     lz, ml = 0, 0
@@ -306,6 +328,7 @@ def decode_gorilla(blob: bytes) -> np.ndarray:
             pos += 13
         xors[i] = read(pos, ml) << (64 - lz - ml)
         pos += ml
+    _check_end(pos, payload)
     # xor-prefix scan: out[i] = v0 ^ x1 ^ ... ^ xi (vectorized accumulate)
     out = np.empty(n, dtype=np.uint64)
     out[0] = v0

@@ -25,7 +25,7 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-N_BUCKETS = 16  # sandbox default; production: 1024+ (see datagen.N_BUCKETS)
+N_BUCKETS = 16  # sandbox analog of Iceberg bucket(url, B); production: 1024+
 
 
 def use_iceberg() -> bool:
