@@ -44,6 +44,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import shutil
 import sys
 import time
 
@@ -449,6 +450,23 @@ def incremental_clean(
     return cleaned, m
 
 
+def swap_dir(tmp: str, dst: str) -> None:
+    """Replace directory ``dst`` with ``tmp`` without a moment where no
+    copy exists: ``dst`` -> ``dst.old``, ``tmp`` -> ``dst``, then delete
+    ``dst.old``.  A failed second rename puts ``dst.old`` back; a crash
+    between the renames leaves the old copy readable at ``dst.old``."""
+    old = dst + ".old"
+    if os.path.isdir(old):  # left by a crash after the new copy landed
+        shutil.rmtree(old)
+    os.rename(dst, old)
+    try:
+        os.rename(tmp, dst)
+    except OSError:
+        os.rename(old, dst)
+        raise
+    shutil.rmtree(old)
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", help="crawl parquet dir (url, warc_ts, html, text, lang)")
@@ -488,11 +506,8 @@ def main() -> None:
             "overwrite"
         ).parquet(tmp)
         n = spark.read.parquet(tmp).count()
-        # atomic-enough swap: validate the rewrite BEFORE replacing
-        import shutil
-
-        shutil.rmtree(catalog_dir)
-        os.rename(tmp, catalog_dir)
+        # validate the rewrite BEFORE replacing
+        swap_dir(tmp, catalog_dir)
         print(json.dumps({"compacted_rows": n, "sec": round(time.time() - t0, 1)}))
         spark.stop()
         return

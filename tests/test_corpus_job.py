@@ -283,3 +283,38 @@ def test_clean_corpus_longest_keeper_policy(spark):
     assert a_lng == {"https://a2.example.com/p"}  # longest copy survives
     cleaned_min.unpersist()
     cleaned_lng.unpersist()
+
+
+def test_swap_dir_keeps_a_readable_copy_when_the_second_rename_fails(
+    tmp_path, monkeypatch
+):
+    """--compact-catalog's swap: if installing the rewrite fails, the old
+    catalog is still on disk (the catalog is primary state, not a cache).
+    Spark-free."""
+    import os
+
+    import pytest
+
+    from jobs.corpus import swap_dir
+
+    cat, tmp = tmp_path / "catalog", tmp_path / "catalog.compact.tmp"
+    for d, body in ((cat, "old"), (tmp, "new")):
+        d.mkdir()
+        (d / "part-0").write_text(body)
+    rename = os.rename
+
+    def failing_rename(src, dst):
+        if os.fspath(src) == os.fspath(tmp):
+            raise OSError("simulated crash while installing the rewrite")
+        rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", failing_rename)
+    with pytest.raises(OSError):
+        swap_dir(str(tmp), str(cat))
+    survivors = [d / "part-0" for d in (cat, tmp_path / "catalog.old")]
+    assert [p.read_text() for p in survivors if p.exists()] == ["old"]
+
+    monkeypatch.setattr(os, "rename", rename)
+    swap_dir(str(tmp), str(cat))
+    assert (cat / "part-0").read_text() == "new"
+    assert sorted(p.name for p in tmp_path.iterdir()) == ["catalog"]

@@ -377,6 +377,47 @@ def test_neardup_clusters_keeper_and_sizes(spark):
     assert rows[30].cluster_size == 2 and rows[31].cluster_id == 30
 
 
+def _jobs_started(spark, group, fn) -> tuple:
+    """Run ``fn`` in a fresh job group; (its result, Spark jobs it started)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_connected_components_pairs_only_runs_no_star_round(spark, monkeypatch):
+    """Disjoint pairs are already a star forest: the exact convergence
+    test passes on the input adjacency, so the only checkpoints are that
+    adjacency and the result — no star round, no confirmation round."""
+    from yatsm_spark.operators import graph
+
+    calls = []
+    checkpoint = graph._checkpoint
+    monkeypatch.setattr(
+        graph, "_checkpoint", lambda df: calls.append(1) or checkpoint(df)
+    )
+    df = spark.createDataFrame([(1, 2), (3, 4), (6, 5)], "id_a long, id_b long")
+    got = sorted(tuple(r) for r in graph.connected_components(df).collect())
+    assert got == [(1, 1), (2, 1), (3, 3), (4, 3), (5, 5), (6, 5)]
+    assert len(calls) == 2
+
+
+def test_neardup_clusters_job_budget(spark):
+    """One star round on the 3-edge graph of the keeper test: the
+    convergence count rides each round's checkpoint, so the whole call
+    stays within 11 Spark jobs."""
+    from yatsm_spark.operators.graph import neardup_clusters, release_components
+
+    df = spark.createDataFrame([(5, 9), (9, 3), (30, 31)], "id_a int, id_b int")
+    out, n_jobs = _jobs_started(spark, "cc_job_budget", lambda: neardup_clusters(df))
+    release_components(out)
+    assert n_jobs <= 11
+
+
 def test_connected_components_string_ids(spark):
     """Labels are min-by-total-order — works for string doc ids too."""
     from yatsm_spark.operators.graph import connected_components
@@ -440,6 +481,30 @@ def test_lsh_max_bucket_star_guard(spark):
     ).toPandas()
     fam = cc[cc.doc_id.str.startswith("d")]
     assert fam.cluster_id.nunique() == 1 and len(fam) == 30
+
+
+def test_lsh_star_metrics_start_no_extra_job(spark):
+    """The star-guard counters are observed on the banding checkpoint:
+    asking for them costs no Spark job."""
+    from yatsm_spark.operators.dedup import minhash_lsh_pairs
+    from yatsm_spark.operators.graph import release_components
+
+    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    docs = spark.createDataFrame(
+        [(f"d{i:03d}", base) for i in range(30)], ["doc_id", "text"]
+    )
+    m: dict = {}
+    plain, n_plain = _jobs_started(
+        spark, "lsh_plain", lambda: minhash_lsh_pairs(docs, max_bucket=10)
+    )
+    metered, n_metered = _jobs_started(
+        spark, "lsh_metered",
+        lambda: minhash_lsh_pairs(docs, max_bucket=10, metrics=m),
+    )
+    release_components(plain)
+    release_components(metered)
+    assert m == {"lsh_star_buckets": 4, "lsh_star_rows": 120}
+    assert n_metered <= n_plain
 
 
 def test_generate_webtext_planted_structure(spark):

@@ -23,7 +23,7 @@ Scale notes (100 TB design):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from yatsm_spark.functions.textops import (
@@ -415,9 +415,8 @@ def minhash_lsh_pairs(
 
     ``metrics`` (optional dict, no-silent-caps rule): with the guard
     armed, records ``lsh_star_buckets`` (buckets demoted to star edges)
-    and ``lsh_star_rows`` (band rows inside them) via one extra 1-row
-    aggregate job on the bucket stats — opt-in, so metric-free callers
-    pay nothing.
+    and ``lsh_star_rows`` (band rows inside them), observed on the
+    banding checkpoint's own action — no extra job.
     """
     from yatsm_spark.operators.graph import materialize_once
 
@@ -435,47 +434,31 @@ def minhash_lsh_pairs(
     # (measured: repartition alone still 400 s; checkpointed ~60 s).  The
     # blocks are the same n_docs*bands slim rows the r3 form shuffled; the
     # returned pairs frame carries the handle for release_components().
-    banded = materialize_once(
-        band_signatures(sig, n_hashes, bands).repartition("band", "bkey")
-    )
-
-    if max_bucket is None:
-        a, b = banded.alias("a"), banded.alias("b")
-        cand = a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bkey") == F.col("b.bkey"))
-            & (F.col("a.id") < F.col("b.id")),
-        ).select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.col("a.sig").alias("sig_a"),
-            F.col("b.sig").alias("sig_b"),
-        )
-    else:
-        # one extra aggregate on the banding key classifies buckets; both
-        # branches stay (band, bkey) equi-joins — nothing quadratic left
-        stats = banded.groupBy("band", "bkey").agg(
-            F.count("*").alias("_bn"), F.min("id").alias("_rid")
+    banded = band_signatures(sig, n_hashes, bands).repartition("band", "bkey")
+    if max_bucket is not None:
+        # bucket size and root ride the checkpoint: windows on the key the
+        # frame is already partitioned by add no exchange
+        w = Window.partitionBy("band", "bkey")
+        banded = banded.withColumn("_bn", F.count("*").over(w)).withColumn(
+            "_rid", F.min("id").over(w)
         )
         if metrics is not None:
-            row = (
-                stats.filter(F.col("_bn") > max_bucket)
-                .agg(
-                    F.count("*").alias("b"),
-                    F.coalesce(F.sum("_bn"), F.lit(0)).alias("r"),
-                )
-                .collect()[0]  # bounded: one row
+            obs = Observation()
+            big = F.col("_bn") > max_bucket
+            banded = banded.observe(
+                obs,
+                # ids are unique per band, so each bucket has one root row
+                F.count_if(big & (F.col("id") == F.col("_rid"))).alias("b"),
+                F.count_if(big).alias("r"),
             )
-            metrics["lsh_star_buckets"] = int(row["b"])
-            metrics["lsh_star_rows"] = int(row["r"])
-        small = banded.join(
-            stats.filter(F.col("_bn") <= max_bucket).select("band", "bkey"),
-            ["band", "bkey"],
-            "left_semi",
-        )
-        a, b = small.alias("a"), small.alias("b")
-        cand_small = a.join(
+    banded = materialize_once(banded)
+    if max_bucket is not None and metrics is not None:
+        metrics["lsh_star_buckets"] = obs.get["b"]
+        metrics["lsh_star_rows"] = obs.get["r"]
+
+    def pairs(side: DataFrame) -> DataFrame:
+        a, b = side.alias("a"), side.alias("b")
+        return a.join(
             b,
             (F.col("a.band") == F.col("b.band"))
             & (F.col("a.bkey") == F.col("b.bkey"))
@@ -486,10 +469,12 @@ def minhash_lsh_pairs(
             F.col("a.sig").alias("sig_a"),
             F.col("b.sig").alias("sig_b"),
         )
-        big = banded.join(
-            stats.filter(F.col("_bn") > max_bucket).select("band", "bkey", "_rid"),
-            ["band", "bkey"],
-        )
+
+    if max_bucket is None:
+        cand = pairs(banded)
+    else:
+        cand_small = pairs(banded.filter(F.col("_bn") <= max_bucket))
+        big = banded.filter(F.col("_bn") > max_bucket)
         roots = big.filter(F.col("id") == F.col("_rid")).select(
             "band", "bkey", F.col("sig").alias("_rsig")
         )

@@ -16,9 +16,12 @@ formulation that converges in O(log n) rounds:
   small-star: every node points its smaller-or-equal neighbors at that
               minimum.
 
-Each star op is ONE window shuffle over the edge list (partitionBy src —
-no groupBy+rejoin round trip).  At convergence the edge list IS the
-component map: (node → component minimum).
+Each star op is ONE window shuffle over the edge list (partitionBy node —
+no groupBy+rejoin round trip).  The loop stops on an exact test: the edge
+list is a star forest when no node has two smaller neighbours, or a
+smaller and a larger one.  Then every edge joins a leaf to a centre below
+all its leaves, so each component is one star labelled by its minimum,
+and star ops preserve connectivity, so these are the input's components.
 
 Scale notes (100 TB design):
   * Near-dup graphs are dense blobs (near-cliques from LSH buckets) plus
@@ -31,9 +34,9 @@ Scale notes (100 TB design):
     round times 9s -> 7s -> 18s -> 139s with persist; flat ~2s with
     checkpoints).  On a real cluster swap localCheckpoint for a reliable
     checkpoint dir if executor loss during the loop must be survivable.
-  * Convergence test is a count() on the symmetric difference — an
-    aggregate over the two checkpointed edge lists, no driver-side collect
-    of edge data.
+  * The star-forest test is a per-node window flag counted by
+    ``observe`` on the round's eager checkpoint, so a round is one action
+    and a pairs-only graph (already a star forest) runs zero rounds.
 
 Determinism: min-label propagation with a total order on ids; no rand(),
 no partition-id dependence — results are cluster-size-invariant (§4.3).
@@ -45,7 +48,7 @@ what the MinHash/LSH pair stages exist to feed.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 
@@ -113,27 +116,51 @@ def release_components(df: DataFrame) -> None:
     _release(df)
 
 
-def _star(edges: DataFrame, large: bool) -> DataFrame:
-    """One large-star (large=True) or small-star round.
+def _adjacency(edges: DataFrame) -> tuple[DataFrame, int]:
+    """Checkpoint distinct child->parent edges (src > dst) as the symmetric
+    adjacency (n, o) and count its star-forest violations on the same
+    action: a node is bad when it has more than one smaller neighbour, or
+    a smaller and a larger one.  The count rides the eager checkpoint via
+    ``observe`` (one fresh Observation per checkpoint), so the convergence
+    test costs no job of its own."""
+    sym = edges.select(F.col("src").alias("n"), F.col("dst").alias("o")).union(
+        edges.select(F.col("dst").alias("n"), F.col("src").alias("o"))
+    )
+    w = Window.partitionBy("n")
+    smaller = F.count_if(F.col("o") < F.col("n")).over(w)
+    bad = (smaller > 1) | ((smaller > 0) & (F.max("o").over(w) > F.col("n")))
+    obs = Observation()
+    adj = _checkpoint(
+        sym.withColumn("_bad", bad)
+        .observe(obs, F.count_if("_bad").alias("bad"))
+        .select("n", "o")
+    )
+    return adj, obs.get["bad"]
 
-    ``edges`` must hold distinct undirected edges as (src, dst).  Works on
-    the symmetrized list; one window shuffle on src.
-    """
-    sym = edges.union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    w = Window.partitionBy("src")
-    m = F.least(F.min("dst").over(w), F.col("src"))
-    star = sym.withColumn("m", m)
-    if large:
-        # attach strictly-larger neighbors to the neighborhood minimum
-        out = star.filter(F.col("dst") > F.col("src")).select(
-            F.col("dst").alias("src"), F.col("m").alias("dst")
-        )
-    else:
-        # attach smaller-or-equal neighbors (and self) to the minimum
-        out = star.filter(F.col("dst") <= F.col("src")).select(
-            F.col("dst").alias("src"), F.col("m").alias("dst")
-        ).union(star.select("src", F.col("m").alias("dst")))
-    return out.filter(F.col("src") != F.col("dst")).distinct()
+
+def _star_round(adj: DataFrame) -> DataFrame:
+    """One large-star then small-star round over the adjacency; returns
+    distinct child->parent edges (src > dst).
+
+    large-star: every node n points its LARGER neighbours at
+    m = min(N(n) ∪ {n}); the distinct bounds dense-cluster rows before
+    the small-star shuffle.  small-star: every node points itself and its
+    smaller neighbours at the least of those — on child->parent edges a
+    node's smaller neighbours are exactly its rows, so no symmetrize."""
+    m = F.least(F.min("o").over(Window.partitionBy("n")), F.col("n"))
+    large = (
+        adj.withColumn("m", m)
+        .filter(F.col("o") > F.col("n"))
+        .select(F.col("o").alias("src"), F.col("m").alias("dst"))
+        .distinct()
+    )
+    star = large.withColumn("m", F.min("dst").over(Window.partitionBy("src")))
+    return (
+        star.filter(F.col("dst") != F.col("m"))
+        .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
+        .union(star.select("src", F.col("m").alias("dst")))
+        .distinct()
+    )
 
 
 def connected_components(
@@ -145,64 +172,36 @@ def connected_components(
     """Component id (= component-minimum node id) for every node that
     appears in ``edges``.  Returns (id, component).
 
-    Raises RuntimeError if the loop has not converged after ``max_iter``
-    alternating rounds (2 * ceil(log2 n) covers any graph; 25 rounds is
-    far past any realistic corpus).
+    Raises RuntimeError if the edge list is not a star forest after
+    ``max_iter`` alternating rounds (2 * ceil(log2 n) covers any graph;
+    25 rounds is far past any realistic corpus).
     """
-    cur = _checkpoint(
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+    s, d = F.col(src_col), F.col(dst_col)
+    cur, bad = _adjacency(
+        edges.select(F.greatest(s, d).alias("src"), F.least(s, d).alias("dst"))
         .filter(F.col("src") != F.col("dst"))
         .distinct()
     )
-
-    def _sig(df: DataFrame) -> tuple:
-        """Order-independent edge-set signature: ONE map-side-combinable
-        1-row aggregate (count + two independent xor-folded 64-bit edge
-        hashes; bit_xor, not sum — ANSI faults on hash-sum overflow).
-        Replaces the former per-round two-sided exceptAll (two corpus-
-        sized shuffle jobs per round, ~log n rounds); a signature match
-        is confirmed with the exact check ONCE at convergence, so a
-        ~2^-128 collision costs a wasted confirmation, never a wrong
-        component."""
-        r = df.agg(
-            F.count("*").alias("n"),
-            F.coalesce(F.bit_xor(F.xxhash64("src", "dst")), F.lit(0)).alias("x1"),
-            F.coalesce(F.bit_xor(F.xxhash64("dst", "src", F.lit(7))), F.lit(0)).alias("x2"),
-        ).collect()[0]
-        return (r["n"], r["x1"], r["x2"])
-
-    prev_sig = _sig(cur)
     for _ in range(max_iter):
-        nxt = _checkpoint(_star(_star(cur, large=True), large=False))
-        sig = _sig(nxt)
-        if sig == prev_sig and (
-            nxt.exceptAll(cur).limit(1).count()
-            + cur.exceptAll(nxt).limit(1).count()
-            == 0
-        ):
-            # nxt is eagerly materialized; the superseded round's blocks
-            # are dead — free them NOW, or each round leaks a block set
-            _release(cur)
-            cur = nxt
+        if not bad:
             break
+        nxt, bad = _adjacency(_star_round(cur))
+        # nxt is eagerly materialized; the superseded round's blocks are
+        # dead — free them NOW, or each round leaks a block set
         _release(cur)
         cur = nxt
-        prev_sig = sig
-    else:
+    if bad:
         raise RuntimeError(f"connected_components: no convergence in {max_iter} rounds")
 
-    # at fixpoint every non-minimum node has exactly one edge, to its
-    # component minimum, and every minimum is some edge's dst but no
-    # edge's src: the node set is src ∪ dst, and minima map to themselves
-    minima = cur.select(F.col("dst").alias("id")).distinct()
+    # a star forest: a leaf's only neighbour is its centre, the component
+    # minimum; a centre's neighbours are all larger, so it labels itself
     result = _checkpoint(
-        cur.select(F.col("src").alias("id"), F.col("dst").alias("component")).union(
-            minima.select("id", F.col("id").alias("component"))
-        )
+        cur.groupBy("n").agg(F.least(F.min("o"), F.col("n")).alias("component"))
+        .select(F.col("n").alias("id"), "component")
     )
-    # the eager result checkpoint makes the final edge list dead too —
-    # exactly ONE block set (one row per clustered node) survives per
-    # call; consumers free it with :func:`release_components`
+    # the eager result checkpoint makes the adjacency dead too — exactly
+    # ONE block set (one row per clustered node) survives per call;
+    # consumers free it with :func:`release_components`
     _release(cur)
     return result
 
