@@ -543,14 +543,12 @@ def _q_emb_neardup_lsh(spark, sf):
     exact-scored.  Every emitted pair is verified with the exact cosine, so
     the result is a deterministic subset of emb_cosine_neardup; the oracle
     reproduces the bucket pipeline from the same hyperplane literals."""
-    from yatsm_spark.operators.similarity import lsh_neardup_pairs_gram
+    from yatsm_spark.operators.similarity import lsh_neardup_pairs
 
     # 4 planes x 4 tables: ~50% recall at sim 0.4 (p_plane = 1 - θ/π =
     # 0.63 -> 1-(1-0.63^4)^4).  Production near-dup thresholds (>=0.9)
-    # support more planes (smaller buckets) at the same recall.  At this
-    # candidate density (~23% of all pairs) the per-bucket GEMM strategy
-    # wins ~5x over the JVM pair-join kernels (tested identical).
-    return lsh_neardup_pairs_gram(
+    # support more planes (smaller buckets) at the same recall.
+    return lsh_neardup_pairs(
         _t(spark, sf, "embeddings"), dim=64, threshold=0.4, n_planes=4, n_tables=4
     )
 

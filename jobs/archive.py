@@ -58,9 +58,11 @@ def main() -> None:
         tier = tier.filter(F.col("bucket_ts") < F.lit(args.older_than).cast("timestamp"))
 
     t0 = time.time()
+    # an empty selection (nothing older than --older-than) sums to NULL
+    points = F.coalesce(F.sum("n_points"), F.lit(0)).alias("points")
     stat_obs = Observation("stat_blobs")
     encode_tier_blobs(tier, args.tier).observe(
-        stat_obs, F.count(F.lit(1)).alias("rows"), F.sum("n_points").alias("points")
+        stat_obs, F.count(F.lit(1)).alias("rows"), points
     ).write.mode("overwrite").parquet(f"{args.output}/stat_blobs")
     msg = (
         f"stat_blobs: {int(stat_obs.get['rows'])} blob rows / "
@@ -70,7 +72,7 @@ def main() -> None:
     if not args.no_lang and "lang_dist" in tier.columns:
         lang_obs = Observation("lang_blobs")
         encode_lang_blobs(tier, args.tier).observe(
-            lang_obs, F.count(F.lit(1)).alias("rows"), F.sum("n_points").alias("points")
+            lang_obs, F.count(F.lit(1)).alias("rows"), points
         ).write.mode("overwrite").parquet(f"{args.output}/lang_blobs")
         msg += (
             f"; lang_blobs: {int(lang_obs.get['rows'])} blob rows / "

@@ -67,6 +67,7 @@ from yatsm_spark.operators.graph import (  # noqa: E402
 )
 from yatsm_spark.operators.quality import repetition_stats  # noqa: E402
 from yatsm_spark.session import get_spark  # noqa: E402
+from yatsm_spark.sources.checkpoints import PartitionMetrics  # noqa: E402
 
 
 def snapshot(crawl: DataFrame) -> DataFrame:
@@ -339,9 +340,11 @@ def incremental_clean(
     """
     from yatsm_spark.functions.textops import fingerprint
     from yatsm_spark.operators.dedup import (
+        band_pairs,
         band_signatures,
         exact_dedup,
         minhash_signatures,
+        sig_sim,
     )
 
     m: dict[str, int] = {}
@@ -364,32 +367,16 @@ def incremental_clean(
     # sig values, so mixed domains silently never match
     sig = minhash_signatures(uniq, minhash_hashes, k=3, hash_fn=minhash_hash_fn)
     banded = band_signatures(sig, minhash_hashes, bands=minhash_bands).persist()
-    a, b = banded.alias("a"), banded.alias("b")
 
-    # sig_sim computed IN the join select (before the pair-dedup): it is
-    # identical on every duplicate of a pair, so the dropDuplicates
-    # exchange moves (id, id, double) rows, never the signature arrays
-    def _agree(sx: F.Column, sy: F.Column) -> F.Column:
-        return F.size(
-            F.filter(
-                F.zip_with(sx, sy, lambda x, y: (x == y).cast("int")),
-                lambda v: v == 1,
-            )
-        )
-
+    # sig_sim computed BEFORE the pair-dedup: it is identical on every
+    # duplicate of a pair, so the dropDuplicates exchange moves
+    # (id, id, double) rows, never the signature arrays
     within = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bkey") == F.col("b.bkey"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
+        band_pairs(banded)
         .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.round(
-                _agree(F.col("a.sig"), F.col("b.sig")) / F.lit(minhash_hashes), 4
-            ).alias("sig_sim"),
+            "id_a",
+            "id_b",
+            sig_sim(F.col("sig_a"), F.col("sig_b"), minhash_hashes).alias("sig_sim"),
         )
         .dropDuplicates(["id_a", "id_b"])
         .filter(F.col("sig_sim") >= neardup_threshold)
@@ -410,9 +397,7 @@ def incremental_clean(
         )
         .select(
             F.col("d.id").alias("id"),
-            F.round(
-                _agree(F.col("d.sig"), F.col("c.sig")) / F.lit(minhash_hashes), 4
-            ).alias("sig_sim"),
+            sig_sim(F.col("d.sig"), F.col("c.sig"), minhash_hashes).alias("sig_sim"),
         )
         .filter(F.col("sig_sim") >= neardup_threshold)
         .select(F.col("id").alias("doc_id"))
@@ -565,8 +550,7 @@ def main() -> None:
 
     meta_dir = os.path.join(args.output, "_meta")
     os.makedirs(meta_dir, exist_ok=True)
-    with open(os.path.join(meta_dir, "corpus_metrics.jsonl"), "a") as fh:
-        fh.write(json.dumps(metrics) + "\n")
+    PartitionMetrics(os.path.join(meta_dir, "corpus_metrics.jsonl")).emit(**metrics)
     print(json.dumps(metrics))
 
 

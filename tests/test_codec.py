@@ -299,6 +299,44 @@ def test_tier_blobs_lossless_archive_cascades_exactly(spark):
     assert from_archive.exceptAll(live).count() + live.exceptAll(from_archive).count() == 0
 
 
+def test_archive_job_empty_selection_archives_zero_points(monkeypatch, tmp_path, spark, capsys):
+    """An --older-than before every bucket selects no rows: the archiver
+    must exit normally and report 0 points for both archives."""
+    import importlib.util
+    import sys
+    from pathlib import Path
+
+    from yatsm_spark.datagen import generate_crawl
+    from yatsm_spark.operators.rollup import rollup, series_clean
+
+    tier_dir = str(tmp_path / "t1d")
+    rollup(series_clean(generate_crawl(spark, n_urls=5, span_days=10)), "1d").write.parquet(tier_dir)
+
+    path = Path(__file__).resolve().parent.parent / "jobs" / "archive.py"
+    spec = importlib.util.spec_from_file_location("archive_job", path)
+    job = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(job)
+
+    class KeptSession:
+        """The shared test session, with main()'s closing stop() ignored."""
+
+        def __getattr__(self, name):
+            return getattr(spark, name)
+
+        def stop(self):
+            pass
+
+    monkeypatch.setattr(job, "get_spark", lambda *a, **k: KeptSession())
+    monkeypatch.setattr(sys, "argv", [
+        "archive.py", "--tier-dir", tier_dir, "--tier", "1d",
+        "--output", str(tmp_path / "out"), "--older-than", "2000-01-01",
+    ])
+    job.main()
+    out = capsys.readouterr().out
+    assert "stat_blobs: 0 blob rows / 0 points" in out
+    assert "lang_blobs: 0 blob rows / 0 points" in out
+
+
 def test_lang_blobs_reconstruct_30d_lang_dist_after_age_out(tmp_path, spark):
     """The lang_dist companion archive closes the last age-out gap: with
     the 1h tier parquet DELETED, the 30d lang distribution rebuilt from

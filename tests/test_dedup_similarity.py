@@ -268,35 +268,16 @@ def test_canonicalize_url_collapses_variants(spark):
     assert twice == got
 
 
-def test_lsh_neardup_rejoin_strategy_identical(vectors):
-    """carry_vectors=False (id-dedup then vector re-join — the wide-
-    embedding strategy) must produce identical pairs and sims."""
+def test_lsh_neardup_gram_strategy_identical(vectors):
+    """The per-bucket GEMM kernel's slab blocking must not change the
+    emitted set: a block boundary inside a bucket exercises the
+    global-index triangle mask."""
     from yatsm_spark.operators.similarity import lsh_neardup_pairs
 
     kw = dict(dim=3, threshold=0.5, n_planes=4, n_tables=2)
-    a = sorted(map(tuple, lsh_neardup_pairs(vectors, **kw).collect()))
-    b = sorted(map(tuple, lsh_neardup_pairs(vectors, carry_vectors=False, **kw).collect()))
-    assert a == b and len(a) > 0
-
-
-def test_lsh_neardup_gram_strategy_identical(vectors):
-    """The per-bucket GEMM strategy (dense-bucket path) emits the same
-    pairs with the same 6dp sims as the JVM pair-join strategies."""
-    from yatsm_spark.operators.similarity import (
-        lsh_neardup_pairs,
-        lsh_neardup_pairs_gram,
-    )
-
-    kw = dict(dim=3, threshold=0.5, n_planes=4, n_tables=2)
-    a = sorted(map(tuple, lsh_neardup_pairs(vectors, **kw).collect()))
-    g = sorted(map(tuple, lsh_neardup_pairs_gram(vectors, **kw).collect()))
-    assert a == g and len(g) > 0
-    # slab blocking must not change the emitted set (block boundary
-    # inside a bucket exercises the global-index triangle mask)
-    g2 = sorted(
-        map(tuple, lsh_neardup_pairs_gram(vectors, block_rows=2, **kw).collect())
-    )
-    assert g2 == g
+    g = sorted(map(tuple, lsh_neardup_pairs(vectors, **kw).collect()))
+    g2 = sorted(map(tuple, lsh_neardup_pairs(vectors, block_rows=2, **kw).collect()))
+    assert g2 == g and len(g) > 0
 
 
 def test_hash_split_partition_invariant(docs):

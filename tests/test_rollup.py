@@ -8,10 +8,10 @@ from yatsm_spark.operators.rollup import (
     TIER_SECONDS,
     cascade,
     gap_fill,
-    locf,
     rollup,
     series_clean,
 )
+from yatsm_spark.operators.series import locf_series
 
 
 def test_datagen_deterministic(spark):
@@ -102,7 +102,7 @@ def test_gap_fill_completes_grid(spark, tiny_crawl):
 
 def test_locf(spark, tiny_crawl):
     r1d = gap_fill(rollup(series_clean(tiny_crawl), "1d"), "1d")
-    f = locf(r1d)
+    f = locf_series(r1d, ("mean_len",), ("url",))
     # gap rows carry the previous real mean
     assert f.filter(F.col("gap_filled") & F.col("mean_len_locf").isNull()).count() == 0
 

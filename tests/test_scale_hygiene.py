@@ -118,6 +118,25 @@ def test_checkpoint_resume_anti_join(spark, tmp_path):
     assert ckpt.pending_partitions(parts, m1, "r2").count() == 6
 
 
+def test_read_manifest_empty_only_when_missing(spark, tmp_path):
+    """A missing manifest is a first run (no rows); an existing one is read
+    as written, and a corrupt part file raises instead of reading as an
+    empty manifest (which would recompute every partition, every run)."""
+    mpath = str(tmp_path / "manifest")
+    assert ckpt.read_manifest(spark, mpath).count() == 0
+    (tmp_path / "manifest").mkdir()
+    assert ckpt.read_manifest(spark, mpath).count() == 0
+    ckpt.mark_done(spark, mpath, "r1", "2", 100, 90, 1234, 17)
+    assert ckpt.read_manifest(spark, mpath).count() == 1
+    for f in (tmp_path / "manifest").iterdir():
+        if f.name.endswith(".crc"):
+            f.unlink()
+        elif f.name.startswith("part-"):
+            f.write_bytes(b"not parquet")
+    with pytest.raises(Exception, match="FAILED_READ_FILE"):
+        ckpt.read_manifest(spark, mpath).count()
+
+
 def test_fingerprint_is_order_insensitive(spark):
     a = spark.createDataFrame([(1, "x"), (2, "y"), (3, "z")], "id long, s string")
     b = spark.createDataFrame([(3, "z"), (1, "x"), (2, "y")], "id long, s string")

@@ -7,12 +7,10 @@ Python in the hot path):
   * :func:`tokens` / :func:`token_stats`   — token counting + quality scoring
   * :func:`lang_id_score`                  — n-gram-heuristic language ID
   * :func:`fingerprint`                    — md5 document fingerprint
-  * :func:`shingles`                       — word k-shingles for Jaccard/MinHash
   * :func:`portable_hash64`                — md5-derived 32-bit-range hash that
     DuckDB reproduces exactly (`('0x'||substr(md5(x),1,8))::BIGINT`) — used
     wherever an oracle must recompute our hashes; xxhash64 stays the fast
     path where no cross-engine parity is needed
-  * :func:`minhash_sig`                    — MinHash signature (n hash fns)
   * :func:`simhash64`                      — 64-bit SimHash of the token set
 
 Reference analog: none — YATSM is numeric-only; these are the axis-A
@@ -92,23 +90,6 @@ def fingerprint(text_col: str = "text") -> Column:
     return F.md5(F.col(text_col) if isinstance(text_col, str) else text_col)
 
 
-def shingles(text_col: str = "text", k: int = 3) -> Column:
-    """Word k-shingles as an array<string> — k consecutive tokens joined by
-    a single space; empty array when fewer than k tokens.
-
-    Built with transform over a 0..n-k index sequence (codegen'd, no UDF).
-    """
-    toks = tokens(text_col)
-    n = F.size(toks)
-    idx = F.sequence(F.lit(0), F.greatest(n - k, F.lit(-1)))
-    return F.when(n >= k, F.transform(
-        idx,
-        lambda i: F.concat_ws(
-            " ", *[F.element_at(toks, (i + j + 1).cast("int")) for j in range(k)]
-        ),
-    )).otherwise(F.array().cast("array<string>"))
-
-
 def portable_hash64(col: Column, salt: int | None = None) -> Column:
     """32-bit-range hash reproducible bit-for-bit in DuckDB:
     Spark  : conv(substr(md5(concat(x, '#', salt)), 1, 8), 16, 10)::bigint
@@ -116,25 +97,6 @@ def portable_hash64(col: Column, salt: int | None = None) -> Column:
     (verified identical this session)."""
     x = col if salt is None else F.concat(col, F.lit(f"#{salt}"))
     return F.conv(F.substring(F.md5(x), 1, 8), 16, 10).cast("bigint")
-
-
-def minhash_sig(shingle_col: Column, n_hashes: int = 16) -> Column:
-    """MinHash signature: array of n minima of (a_i*h + b_i) mod PRIME over
-    the shingle set, h = portable md5-derived hash.  One codegen'd
-    expression per hash fn — no UDF, no shuffle.
-
-    Scale note: signature computation is map-side; the LSH band join that
-    consumes it is where the shuffle happens (operators/dedup.py).
-    """
-    base = F.transform(shingle_col, lambda s: portable_hash64(s))
-
-    def _perm(a: int, b: int):
-        return lambda h: (h * a + b) % _PRIME
-
-    sigs = []
-    for i in range(n_hashes):
-        sigs.append(F.array_min(F.transform(base, _perm(2 * i + 1, 7919 * (i + 1)))))
-    return F.array(*sigs)
 
 
 def simhash64(text_col: str = "text", bits: int = 64) -> Column:

@@ -177,8 +177,8 @@ def shingle_array(text_col: str | F.Column, k: int = 3) -> F.Column:
 
     k offset slices of split(text) zip-concatenated: split() re-evaluates
     k times per ROW (array-level exprs, Catalyst inlines the alias), not
-    once per token — O(k*T) per doc, unlike the per-element element_at
-    form (O(T^2), textops.py::shingles) or the posexplode+window form
+    once per token — O(k*T) per doc, unlike a per-element element_at
+    form (O(T^2)) or the posexplode+window form
     (:func:`shingle_rows`, which shuffle-sorts every token row).  Docs
     with fewer than k tokens yield an empty array (clamped slice length).
     Multiset semantics: repeated shingles stay repeated.
@@ -286,12 +286,13 @@ def minhash_signatures(
     pushing every shingle occurrence through Generate + hashAgg cost
     50x the array-side form at 120k docs / 36M shingles, local[8]
     (377s explode+agg vs 7.2s array-side, same JVM — the generated-row
-    volume, not the hash, was the bottleneck).  The OTHER array
-    formulation (textops.py::minhash_sig) re-inlines the shingle
-    SUBTREE n_hashes times — interpreted HOFs get no common-
-    subexpression elimination, so it recomputes the shingle hashes 16x
-    (measured 226s vs 3s on 500 docs); binding via transform(array(.))
-    is what makes the array-side form safe.
+    volume, not the hash, was the bottleneck).  The shingle array is
+    bound ONCE because an array formulation that references the shingle
+    expression in each of the n_hashes minima re-inlines that SUBTREE
+    n_hashes times — interpreted HOFs get no common-subexpression
+    elimination, so it recomputes the shingle hashes 16x (measured 226s
+    vs 3s on 500 docs); binding via transform(array(.)) is what makes
+    the array-side form safe.
 
     Per-doc work never leaves the scan task: at 100 TB this stage is
     pure map throughput with NO shuffle at all (the old form shuffled
@@ -381,6 +382,37 @@ def band_signatures(sig: DataFrame, n_hashes: int, bands: int) -> DataFrame:
     )
 
 
+def band_pairs(banded: DataFrame) -> DataFrame:
+    """LSH band self-join of :func:`band_signatures` rows: every (id_a <
+    id_b) pair sharing a (band, bkey) bucket, once per shared band, as
+    (id_a, id_b, sig_a, sig_b).  The join key bounds candidates by bucket
+    population; callers dedup pairs after scoring them."""
+    a, b = banded.alias("a"), banded.alias("b")
+    return a.join(
+        b,
+        (F.col("a.band") == F.col("b.band"))
+        & (F.col("a.bkey") == F.col("b.bkey"))
+        & (F.col("a.id") < F.col("b.id")),
+    ).select(
+        F.col("a.id").alias("id_a"),
+        F.col("b.id").alias("id_b"),
+        F.col("a.sig").alias("sig_a"),
+        F.col("b.sig").alias("sig_b"),
+    )
+
+
+def sig_sim(a: F.Column, b: F.Column, n_hashes: int) -> F.Column:
+    """Signature-agreement fraction of two MinHash signatures (the
+    Jaccard estimate), rounded to 4 dp."""
+    agree = F.size(
+        F.filter(
+            F.zip_with(a, b, lambda x, y: (x == y).cast("int")),
+            lambda v: v == 1,
+        )
+    )
+    return F.round(agree / F.lit(n_hashes), 4)
+
+
 def minhash_lsh_pairs(
     docs: DataFrame,
     n_hashes: int = 16,
@@ -456,24 +488,10 @@ def minhash_lsh_pairs(
         metrics["lsh_star_buckets"] = obs.get["b"]
         metrics["lsh_star_rows"] = obs.get["r"]
 
-    def pairs(side: DataFrame) -> DataFrame:
-        a, b = side.alias("a"), side.alias("b")
-        return a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bkey") == F.col("b.bkey"))
-            & (F.col("a.id") < F.col("b.id")),
-        ).select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.col("a.sig").alias("sig_a"),
-            F.col("b.sig").alias("sig_b"),
-        )
-
     if max_bucket is None:
-        cand = pairs(banded)
+        cand = band_pairs(banded)
     else:
-        cand_small = pairs(banded.filter(F.col("_bn") <= max_bucket))
+        cand_small = band_pairs(banded.filter(F.col("_bn") <= max_bucket))
         big = banded.filter(F.col("_bn") > max_bucket)
         roots = big.filter(F.col("id") == F.col("_rid")).select(
             "band", "bkey", F.col("sig").alias("_rsig")
@@ -490,17 +508,13 @@ def minhash_lsh_pairs(
         )
         cand = cand_small.unionByName(cand_big)
 
-    agree = F.size(
-        F.filter(
-            F.zip_with("sig_a", "sig_b", lambda x, y: (x == y).cast("int")),
-            lambda v: v == 1,
-        )
-    )
     # score BEFORE the pair-dedup: sig_sim is identical on every duplicate
     # of a pair (same signatures), so the dropDuplicates exchange moves
     # (id, id, double) instead of two 16-element bigint arrays per row
     out = cand.select(
-        "id_a", "id_b", F.round(agree / F.lit(n_hashes), 4).alias("sig_sim")
+        "id_a",
+        "id_b",
+        sig_sim(F.col("sig_a"), F.col("sig_b"), n_hashes).alias("sig_sim"),
     ).dropDuplicates(["id_a", "id_b"])
     # carry the banded materialization handle so callers can free the
     # blocks (graph.release_components) once the pairs are consumed; note

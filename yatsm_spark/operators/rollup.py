@@ -4,8 +4,8 @@ Operators (SURVEY.md §2.2/§2.4):
   * :func:`series_clean`   — F1 valid-range, F2 categorical mask, F3 dedup
   * :func:`rollup`         — A1 tumbling-window rollup + A3 lang distribution
   * :func:`cascade`        — A2 tier re-aggregation (1h -> 1d -> 30d), exact
-  * :func:`gap_fill`       — A4 materialize missing intervals (cnt=0 rows)
-  * :func:`locf`           — A4 last-observation-carried-forward fill
+  * :func:`gap_fill`       — A4 materialize missing intervals (cnt=0 rows);
+    fill them by last observation with ``series.locf_series``
 
 Reference analog: YATSM has no rollup (it consumes raw irregular series);
 these implement the north_star's "continuous aggregates at 1h/1d/30d
@@ -31,6 +31,17 @@ from pyspark.sql import functions as F
 TIERS = {"1h": "1 hour", "1d": "1 day", "30d": "30 days"}
 # seconds per tier (30d tier is a fixed 30-day epoch-aligned bucket)
 TIER_SECONDS = {"1h": 3600, "1d": 86400, "30d": 30 * 86400}
+
+
+def bucket_col(ts_col: str, tier: str) -> F.Column:
+    """Epoch-aligned tumbling bucket start (same arithmetic as
+    ``F.window(ts, interval)``, origin 1970-01-01 UTC, exposed as a plain
+    timestamp so it cascades / joins / oracle-checks trivially)."""
+    secs = TIER_SECONDS[tier]
+    return F.timestamp_seconds(
+        (F.floor(F.unix_timestamp(F.col(ts_col)) / secs) * secs).cast("long")
+    )
+
 
 # sum_ts = sum of observation unix epochs: lets downstream model fits use
 # the true mean observation time per bucket instead of the bucket label
@@ -87,16 +98,6 @@ def series_clean(crawl: DataFrame, keep_text: bool = True) -> DataFrame:
     )
 
 
-def _bucket(ts_col: str, tier: str) -> F.Column:
-    """Epoch-aligned tumbling bucket start.  Same arithmetic as
-    ``F.window(ts, interval)`` (origin 1970-01-01 UTC) but exposed as a
-    plain timestamp column — easier to cascade, join and oracle-check."""
-    secs = TIER_SECONDS[tier]
-    return F.timestamp_seconds(
-        (F.floor(F.unix_timestamp(F.col(ts_col)) / secs) * secs).cast("long")
-    )
-
-
 def rollup(clean: DataFrame, tier: str = "1h") -> DataFrame:
     """A1+A3: per-(url, bucket) count/sum/mean/min/max of text_len and the
     language distribution as a deterministic ``map<string,bigint>``.
@@ -107,7 +108,7 @@ def rollup(clean: DataFrame, tier: str = "1h") -> DataFrame:
     exchange of the raw data (only the tiny lang-level rows move).
     """
     by_lang = clean.groupBy(
-        "url", _bucket("warc_ts", tier).alias("bucket_ts"), "lang"
+        "url", bucket_col("warc_ts", tier).alias("bucket_ts"), "lang"
     ).agg(
         F.count("*").alias("cnt"),
         F.sum("text_len").alias("sum_len"),
@@ -142,7 +143,7 @@ def cascade(finer: DataFrame, tier: str) -> DataFrame:
     excluded so fills never pollute coarser tiers.
     """
     real = finer.filter(~F.col("gap_filled"))
-    core = real.groupBy("url", _bucket("bucket_ts", tier).alias("bucket_ts")).agg(
+    core = real.groupBy("url", bucket_col("bucket_ts", tier).alias("bucket_ts")).agg(
         F.sum("cnt").alias("cnt"),
         F.sum("sum_len").alias("sum_len"),
         F.min("min_len").alias("min_len"),
@@ -152,7 +153,7 @@ def cascade(finer: DataFrame, tier: str) -> DataFrame:
     langs = (
         real.select(
             "url",
-            _bucket("bucket_ts", tier).alias("bucket_ts"),
+            bucket_col("bucket_ts", tier).alias("bucket_ts"),
             F.explode("lang_dist").alias("lang", "lang_cnt"),
         )
         .groupBy("url", "bucket_ts", "lang")
@@ -213,23 +214,6 @@ def gap_fill(tier_df: DataFrame, tier: str) -> DataFrame:
         .select(*CORE_COLS, "lang_dist", "gap_filled")
     )
     return tier_df.unionByName(gaps)
-
-
-def locf(filled: DataFrame, cols: tuple[str, ...] = ("mean_len",)) -> DataFrame:
-    """A4 option: last-observation-carried-forward over gap rows.
-
-    ``last(col, ignorenulls=True)`` over an unbounded-preceding frame per
-    url — one window shuffle, no join.
-    """
-    w = (
-        Window.partitionBy("url")
-        .orderBy("bucket_ts")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    out = filled
-    for c in cols:
-        out = out.withColumn(f"{c}_locf", F.last(c, ignorenulls=True).over(w))
-    return out
 
 
 # ------------------------------------------------------------- retention

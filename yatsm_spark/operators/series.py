@@ -42,19 +42,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from yatsm_spark.operators.rollup import TIER_SECONDS
+from yatsm_spark.operators.rollup import TIER_SECONDS, bucket_col
 
 AGG_COLS = ["cnt", "sum_val", "mean_val", "min_val", "max_val"]
-
-
-def bucket_col(ts_col: str, tier: str) -> F.Column:
-    """Epoch-aligned tumbling bucket start (same arithmetic as
-    ``F.window(ts, interval)``, origin 1970-01-01 UTC, exposed as a plain
-    timestamp so it cascades / joins / oracle-checks trivially)."""
-    secs = TIER_SECONDS[tier]
-    return F.timestamp_seconds(
-        (F.floor(F.unix_timestamp(F.col(ts_col)) / secs) * secs).cast("long")
-    )
 
 
 def rollup_series(

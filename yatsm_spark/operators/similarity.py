@@ -5,7 +5,8 @@ Training-data-pipeline ANN family (task brief first-class components):
   * :func:`cosine_sim_col`    — codegen'd cosine similarity of two array cols
   * :func:`brute_topk`        — exact top-k neighbors (baseline)
   * :func:`lsh_bucket_topk`   — random-hyperplane-LSH bucketed top-k (scale path)
-  * :func:`lsh_neardup_pairs` — bucketed near-dup PAIRS, exact-scored (scale path)
+  * :func:`lsh_neardup_pairs` — bucketed near-dup PAIRS, exact-scored per
+    bucket by a vectorized pandas GEMM kernel (scale path)
   * :func:`ivf_topk`          — inverted-file (cell-probed) top-k (scale path #2)
 
 Scale notes (100 TB design):
@@ -17,8 +18,8 @@ Scale notes (100 TB design):
     searches only same-bucket candidates: the join key is the bucket id,
     so the shuffle is bounded by bucket population, not N x Q.  Recall is
     tunable with n_planes / n_tables; exactness is NOT claimed (ANN).
-  * All vector math stays in zip_with/aggregate higher-order functions —
-    whole-stage codegen, zero Python.
+  * All other vector math stays in zip_with/aggregate higher-order
+    functions — JVM-side, zero Python.
 """
 
 from __future__ import annotations
@@ -37,19 +38,6 @@ def _dot(a: Column, b: Column) -> Column:
 
 def _norm(a: Column) -> Column:
     return F.sqrt(_dot(a, a))
-
-
-def _dot_unrolled(a: Column, b: Column, dim: int) -> Column:
-    """Dot product unrolled for a KNOWN dim into a left-associated
-    element_at chain — bit-identical to the :func:`_dot` left fold (the
-    fold's 0.0 seed plus the same left-to-right adds), but whole-stage
-    codegen-able where the interpreted higher-order aggregate is not
-    (measured ~1.4x on the pair-scoring hot path).  Inputs must already
-    be double arrays (cast once per VECTOR, not per pair)."""
-    out = F.element_at(a, 1) * F.element_at(b, 1)
-    for i in range(2, dim + 1):
-        out = out + F.element_at(a, i) * F.element_at(b, i)
-    return out
 
 
 def cosine_sim_col(a: Column, b: Column) -> Column:
@@ -145,144 +133,35 @@ def lsh_neardup_pairs(
     n_tables: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    carry_vectors: bool = True,
+    block_rows: int = 1024,
 ) -> DataFrame:
     """Cosine near-duplicate PAIRS at scale: hyperplane-LSH bucketed
     candidates, exact-scored — the 100 TB replacement for the O(N^2)
     all-pairs :func:`cosine_neardup_pairs` (kept as the small-N verifier).
 
-    ``carry_vectors`` picks the shuffle-payload strategy: True ships the
-    vectors through the bucket join + pair-dedup (one join, heavier rows —
-    right for narrow embeddings like this repo's dim-64 test table); False
-    dedups candidate (id_a, id_b) pairs first and re-joins the vectors
-    after (two extra equi-joins, ~16 B/row dedup shuffle — right for
-    production-width embeddings, dim >= ~256, where a float vector is
-    1-3 KB of network per candidate).  Identical output (tested).
-
-    Plan shape: each vector lands in ``n_tables`` buckets (one per
-    hyperplane table, seeds 42+t); the self-join key is (table, bucket), so
-    the shuffle is bounded by bucket population — never all pairs.  A pair
-    colliding in several tables is deduped before scoring; every emitted
-    pair is verified with the EXACT cosine, so output ⊆ the exact pair set
-    (approximation only costs recall, never precision).  Deterministic:
-    seeded hash-derived hyperplanes, no RNG state — the DuckDB oracle
-    reproduces the full pipeline from the same literals.
-    """
-    tables = [_hyperplanes(dim, n_planes, seed=42 + t) for t in range(n_tables)]
-    # vectors enriched ONCE with (double-cast array, norm): float->double
-    # element cast is exact and sqrt(dot(v,v)) per VECTOR is the same
-    # double as computed per pair, so the pair kernel collapses to one
-    # unrolled codegen'd dot + a multiply — bit-identical to the old
-    # 6-pass interpreted HOF cosine, at ~1/4 the expression work.
-    vd = vectors.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).cast("array<double>").alias("v"),
-    ).withColumn("nrm", F.sqrt(_dot_unrolled(F.col("v"), F.col("v"), dim)))
-    sim_expr = _dot_unrolled(F.col("a.v"), F.col("b.v"), dim) / (
-        F.col("a.nrm") * F.col("b.nrm")
-    )
-    cols = [F.col("id")] + ([F.col("v"), F.col("nrm")] if carry_vectors else [])
-    bucketed = vd.select(
-        *cols,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(t).alias("tbl"), _bucket_expr(F.col("v"), pl).alias("bkt")
-                    )
-                    for t, pl in enumerate(tables)
-                ]
-            )
-        ).alias("tb"),
-    ).withColumn("tbl", F.col("tb.tbl")).withColumn("bkt", F.col("tb.bkt")).drop("tb")
-    a, b = bucketed.alias("a"), bucketed.alias("b")
-    join_cond = (
-        (F.col("a.tbl") == F.col("b.tbl"))
-        & (F.col("a.bkt") == F.col("b.bkt"))
-        & (F.col("a.id") < F.col("b.id"))
-    )
-    if carry_vectors:
-        # SCORE FIRST, dedup after: the exact cosine + threshold filter is
-        # map-side right behind the bucket join, so the cross-table
-        # dropDuplicates shuffles only the (few) matching pairs — never
-        # the full candidate set carrying two float vectors per row.
-        # A pair colliding in several tables re-scores its (codegen'd)
-        # dot per collision — pennies next to the avoided shuffle.  sim
-        # is deterministic per pair, so cross-table duplicates are
-        # identical rows and the post-score dedup is exact.
-        scored = (
-            a.join(b, join_cond)
-            .select(
-                F.col("a.id").alias("id_a"),
-                F.col("b.id").alias("id_b"),
-                sim_expr.alias("sim"),
-            )
-            .filter(F.col("sim") >= threshold)
-        )
-        return scored.select(
-            "id_a", "id_b", F.round("sim", 6).alias("sim")
-        ).dropDuplicates(["id_a", "id_b"])
-    # low-network strategy: dedup slim (id_a, id_b) pairs first (16 B/row
-    # shuffle regardless of embedding width), re-join the norm-enriched
-    # vectors after — each distinct pair scored exactly ONCE, and when
-    # the vector table is broadcastable the re-join is map-side — right
-    # for production widths (dim >= ~256, 1-3 KB/vector) or many tables
-    pairs = (
-        a.join(b, join_cond)
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    va = vd.select(F.col("id").alias("id_a"), F.col("v").alias("va"), F.col("nrm").alias("na"))
-    vb = vd.select(F.col("id").alias("id_b"), F.col("v").alias("vb"), F.col("nrm").alias("nb"))
-    cand = pairs.join(va, "id_a").join(vb, "id_b")
-    return (
-        cand.withColumn(
-            "sim",
-            _dot_unrolled(F.col("va"), F.col("vb"), dim) / (F.col("na") * F.col("nb")),
-        )
-        .filter(F.col("sim") >= threshold)
-        .select("id_a", "id_b", F.round("sim", 6).alias("sim"))
-    )
-
-
-def lsh_neardup_pairs_gram(
-    vectors: DataFrame,
-    dim: int,
-    threshold: float = 0.9,
-    n_planes: int = 8,
-    n_tables: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    block_rows: int = 1024,
-) -> DataFrame:
-    """:func:`lsh_neardup_pairs` with a per-bucket BLAS gram-matrix
-    kernel — the DENSE-bucket strategy.  Same hyperplane tables, same
-    bucket ids, same pair set; the scoring changes shape:
-
-      * the JVM strategies materialize every candidate PAIR through a
-        self-join and score row-at-a-time (~14 us/pair measured — fine
-        when buckets are sparse and candidates ~ matches);
-      * here each (table, bucket) group ships its members ONCE over
-        Arrow (rows x dim doubles — never rows^2) into a vectorized
-        pandas kernel that row-normalizes and computes the bucket's
-        cosine matrix in ``block_rows``-high GEMM slabs, emitting only
-        the (id_a < id_b, sim >= threshold) survivors.  At the bench
-        shape (2000 vecs, 4 planes x 4 tables => 467k candidates = 23%
-        of all pairs) this is ~4x the unrolled JVM kernel.
+    Each vector lands in ``n_tables`` buckets (one per hyperplane table,
+    seeds 42+t).  Each (table, bucket) group ships its members ONCE over
+    Arrow (rows x dim doubles — never rows^2) into a vectorized pandas
+    kernel that row-normalizes and computes the bucket's cosine matrix in
+    ``block_rows``-high GEMM slabs, emitting only the (id_a < id_b,
+    sim >= threshold) survivors.  A pair colliding in several tables is
+    deduped after scoring; every emitted pair carries its EXACT cosine,
+    so output ⊆ the exact pair set (approximation only costs recall,
+    never precision).
 
     Shuffle = one groupBy on (table, bucket): rows x n_tables vector
-    copies, bounded like the JVM path.  Memory per group is
+    copies, bounded by bucket population.  Memory per group is
     O(block_rows x bucket_size); bucket size is controlled by n_planes
-    exactly as in the JVM strategies (both degrade quadratically in
-    WORK on a hot bucket — this one linearly in MEMORY).
+    (work degrades quadratically on a hot bucket, memory linearly).
 
-    Determinism caveat: BLAS sums a different (fixed, blocked) order
-    than the sequential left fold, so ``sim`` can differ from the JVM
-    strategies in the last ulp — invisible after the 6 dp round unless
-    a value sits within ~1e-10 of a rounding boundary.  Rounding
-    happens BEFORE the cross-table dedup so colliding tables (which
-    compute identical doubles for identical member sets) cannot emit
-    conflicting rows.
+    Determinism: seeded hash-derived hyperplanes, no RNG state — the
+    DuckDB oracle reproduces the full pipeline from the same literals.
+    BLAS sums in a different (fixed, blocked) order than the sequential
+    left fold, so ``sim`` can differ from :func:`cosine_sim_col` in the
+    last ulp — invisible after the 6 dp round unless a value sits within
+    ~1e-10 of a rounding boundary.  Rounding happens BEFORE the
+    cross-table dedup so colliding tables (which compute identical
+    doubles for identical member sets) cannot emit conflicting rows.
     """
     import numpy as np
     import pandas as pd
@@ -314,7 +193,7 @@ def lsh_neardup_pairs_gram(
         n = len(pdf)
         if n < 2:
             return pd.DataFrame({"id_a": [], "id_b": [], "sim": []})
-        # id sort gives the same a<b orientation as the JVM join condition
+        # id sort gives the a<b orientation of a Spark join condition
         # (numeric ids numerically; ASCII string ids byte-wise like Spark)
         pdf = pdf.sort_values("id", kind="mergesort")
         ids = pdf["id"].to_numpy()
@@ -330,8 +209,6 @@ def lsh_neardup_pairs_gram(
             out_a.append(ids[rows + s])
             out_b.append(ids[cols])
             out_s.append(sims[rows, cols])
-        if not out_a:
-            return pd.DataFrame({"id_a": [], "id_b": [], "sim": []})
         return pd.DataFrame(
             {
                 "id_a": np.concatenate(out_a),

@@ -387,7 +387,7 @@ def _cm_idx(item: F.Column, r: int, width: int) -> F.Column:
     """Sparse cell index r*width + col for CM row ``r``: ONE md5-derived
     base hash per item (portable_hash64) re-salted ARITHMETICALLY per
     row — col_r = ((h*(2r+1) + 7919*(r+1)) mod PRIME) mod width, the
-    minhash_sig affine-rehash trick.  The original per-row salted md5
+    dedup.minhash_signatures affine-rehash trick.  The original per-row salted md5
     (concat + md5 + hex-substr + conv PER ROW PER DEPTH) anti-scaled
     with threads on allocation pressure: the sketch-suite N-vs-4N
     campaign measured cm_sketch 21.5 s @local[8] vs 82.9 s @local[32]

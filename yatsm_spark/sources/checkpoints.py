@@ -37,10 +37,15 @@ MANIFEST_SCHEMA = (
 
 
 def read_manifest(spark: SparkSession, manifest_path: str) -> DataFrame:
-    try:
-        return spark.read.parquet(manifest_path)
-    except Exception:  # first run: empty manifest
+    """The manifest rows, or none on a first run (no manifest yet).  Any
+    other read failure raises: a corrupt manifest read as empty would
+    silently recompute every partition on every run."""
+    jvm, jsc = spark.sparkContext._jvm, spark.sparkContext._jsc
+    path = jvm.org.apache.hadoop.fs.Path(manifest_path)
+    if not path.getFileSystem(jsc.hadoopConfiguration()).exists(path):
         return spark.createDataFrame([], MANIFEST_SCHEMA)
+    # explicit schema: an existing empty directory reads as empty
+    return spark.read.schema(MANIFEST_SCHEMA).parquet(manifest_path)
 
 
 def mark_done(
@@ -128,7 +133,7 @@ def dir_bytes(*paths: str) -> int:
 
 
 class PartitionMetrics:
-    """Lineage metrics JSONL writer (driver-side, one line per chunk)."""
+    """Job metrics JSONL writer: one appended line per chunk or run."""
 
     def __init__(self, path: str):
         self.path = path
